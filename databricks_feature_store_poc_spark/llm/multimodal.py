@@ -2,18 +2,24 @@
 
 The engine's multimodal contract: media payloads are opaque ``binary``
 columns with typed metadata alongside; embeddings are
-``array<float>`` columns. Three operators:
+``array<float>`` columns. The module holds:
 
-- ``mm_embedding_norm``  — L2 norm + normalization over the embedding
-  column (oracle-checked) — JVM higher-order functions only.
-- ``mm_binary_meta``     — bytes + typed metadata extraction from a binary
-  payload column (oracle-checked via octet_length/md5 on the same bytes).
-- ``mm_decode_stub``     — the decode/feature-extract plumbing: a
-  mapInPandas pipeline with a real Arrow batch boundary, real output
-  schema, and a *deterministic fake decoder* (the image/audio libs are
-  not in this container — see :func:`decode_image_real`, which raises
-  NotImplementedError behind an import guard). The Spark-side shape —
-  schema, batching, partition parallelism — is real and tested.
+- ``mm_embedding_norm`` / ``mm_binary_meta`` — JVM-only vector hygiene
+  and typed-binary metadata.
+- ``mm_decode_stub`` / ``mm_frame_sample`` — the decode plumbing with a
+  deterministic fake decoder (code points, so DuckDB can replicate it).
+- Eight REAL byte-level codecs, each an encode stage (document ->
+  genuine file bytes) and a general decode stage: PPM, BMP, WAV, PNG,
+  GIF and three JPEG contracts (baseline grayscale, baseline color,
+  progressive) served by ONE JFIF reader (``_make_jpeg_reader``) and
+  ONE JFIF writer (``_jfif_writer``).
+- dHash image fingerprints and the image dedup / Hamming top-k queries
+  built on them.
+
+Every codec stage is one ``_row_kernel``: a per-row function wrapped in
+an Arrow-batched mapInPandas kernel whose schema and pandas dtypes come
+from a single column list. Kernels are closures, so cloudpickle ships
+them BY VALUE — executors never import this repo.
 
 Scale: per-row media decode is embarrassingly parallel; the design rule
 is to keep payloads OUT of shuffles (decode-then-project before any join;
@@ -35,21 +41,47 @@ from databricks_feature_store_poc_spark.registry import query
 from databricks_feature_store_poc_spark.sources.catalog import load_table
 
 
-def decode_image_real(payload: bytes) -> dict:
-    """Real image decode — requires PIL, which is deliberately absent here.
+_INT, _LONG, _BOOL = T.IntegerType(), T.LongType(), T.BooleanType()
+_PAYLOAD = [("payload", T.BinaryType())]  # every codec's encode output
+_PANDAS_DTYPES = {"integer": "Int32", "long": "Int64", "boolean": "boolean"}
 
-    The engine ships the plumbing (schema, batching, UDF signature); the
-    codec is a deployment concern. Swap this in for `fake_decode` inside
-    mm_decode_stub's mapInPandas body on a cluster with codecs installed.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "image codecs are not installed in this environment; "
-            "mm_decode_stub uses a deterministic fake decoder instead"
-        ) from exc
-    raise NotImplementedError("wire PIL.Image.open(io.BytesIO(payload)) here")
+
+def _row_kernel(fn, columns, source="payload"):
+    """One mapInPandas kernel for the codec family: ``fn`` maps one
+    ``source`` cell to the row's output values (a tuple, or a bare value
+    when there is one column) and the kernel emits ``doc_id`` plus
+    ``columns``, a list of (name, Spark type). A NULL cell yields an
+    all-NULL row without calling ``fn`` (the mm-family diagnostic-row
+    contract: a decoder cannot invent pixels).
+
+    Returns (kernel, schema), ready for ``df.mapInPandas(*...)``. Both
+    the StructType and the pandas nullable dtypes (Int32/Int64/boolean,
+    so NULLs survive Arrow) derive from the one column list. The kernel
+    is a closure, so cloudpickle serializes it BY VALUE — executors
+    never import this repo — provided ``fn`` is a closure too, never a
+    module-level function."""
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType())]
+        + [T.StructField(name, typ) for name, typ in columns]
+    )
+    names = [name for name, _ in columns]
+    dtypes = [_PANDAS_DTYPES.get(typ.typeName()) for _, typ in columns]
+    single = len(columns) == 1
+    null_row = (None,) * len(columns)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                null_row if x is None else (fn(x),) if single else fn(x)
+                for x in pdf[source]
+            ]
+            out = {"doc_id": pdf["doc_id"].values}
+            for i, (name, dtype) in enumerate(zip(names, dtypes)):
+                col = [r[i] for r in rows]
+                out[name] = pd.array(col, dtype=dtype) if dtype else col
+            yield pd.DataFrame(out)
+
+    return kernel, schema
 
 
 @query(
@@ -184,59 +216,39 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     production-real: Arrow-batched mapInPandas, explicit output schema,
     per-partition parallelism, and the binary payload column CROSSES the
     Arrow boundary alongside the text (proving binary plumbing) — only
-    the codec call is fake (see decode_image_real for where the real one
-    goes).
+    the codec call is fake; the real codecs below (PPM through JPEG) run
+    in the same ``_row_kernel`` shape.
 
     Contract (r11): a NULL payload decodes to NULL width/height/hist —
     a decoder cannot invent pixels; the row is kept so downstream sees
     the failure, mirroring mm_embedding_norm's diagnostic shape."""
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fake_decode(text) -> tuple:
-            if text is None:
-                return None, None, None
-            n = len(text)
-            width = 16 + ord(text[0]) % 64 if n else 16
-            height = 16 + ord(text[-1]) % 64 if n else 16
-            hist = [0, 0, 0, 0]
-            for ch in text:
-                hist[(ord(ch) // 64) % 4] += 1
-            tot = max(n, 1)
-            return width, height, ",".join(f"{h / tot:.6f}" for h in hist)
+    def fake_decode(text) -> tuple:
+        n = len(text)
+        width = 16 + ord(text[0]) % 64 if n else 16
+        height = 16 + ord(text[-1]) % 64 if n else 16
+        hist = [0, 0, 0, 0]
+        for ch in text:
+            hist[(ord(ch) // 64) % 4] += 1
+        tot = max(n, 1)
+        return width, height, ",".join(f"{h / tot:.6f}" for h in hist)
 
-        for pdf in batches:
-            rows = [fake_decode(t) for t in pdf["text"]]
-            # byte_hist is emitted as a canonical comma-joined string
-            # (6-decimal %.6f on the identical IEEE double both engines
-            # compute) instead of array<double>: the driver's pandas
-            # sort-canonicalizer cannot hash ndarray cells. Same
-            # treatment as agg_collect_set. A real deployment would keep
-            # the array column; the canonicalization is an oracle
-            # contract, not an engine limitation (mm_embedding_norm
-            # keeps real arrays in-plan). width/height use pandas
-            # nullable Int32 so NULL decodes survive Arrow as NULLs.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "byte_hist": [r[2] for r in rows],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("byte_hist", T.StringType()),
-        ]
-    )
+    # byte_hist is emitted as a canonical comma-joined string (6-decimal
+    # %.6f on the identical IEEE double both engines compute) instead of
+    # array<double>: the driver's pandas sort-canonicalizer cannot hash
+    # ndarray cells. Same treatment as agg_collect_set. A real deployment
+    # would keep the array column; the canonicalization is an oracle
+    # contract, not an engine limitation (mm_embedding_norm keeps real
+    # arrays in-plan).
     d = load_table(spark, sf_dir, "documents")
     payloads = d.select(
         "doc_id", "text", F.encode("text", "UTF-8").alias("payload")
     )
-    return payloads.mapInPandas(decode_batches, schema)
+    return payloads.mapInPandas(*_row_kernel(
+        fake_decode,
+        [("width", _INT), ("height", _INT), ("byte_hist", T.StringType())],
+        source="text",
+    ))
 
 
 @query(
@@ -394,72 +406,32 @@ def mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     family)."""
     import re
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def to_ppm(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            w, h = 8 + n % 8, 8 + (n // 8) % 8
-            length = w * h * 3
-            pixels = tb[:length].ljust(length, b"\x00")
-            return b"P6\n%d %d\n255\n" % (w, h) + pixels
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_ppm(t) for t in pdf["text"]],
-                }
-            )
+    def to_ppm(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        w, h = 8 + n % 8, 8 + (n // 8) % 8
+        length = w * h * 3
+        pixels = tb[:length].ljust(length, b"\x00")
+        return b"P6\n%d %d\n255\n" % (w, h) + pixels
 
     _HDR = re.compile(rb"^P6\n(\d+) (\d+)\n255\n")
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(payload) -> tuple:
-            if payload is None:
-                return None, None, None, None
-            m = _HDR.match(payload)
-            if not m:  # not a PPM this decoder understands
-                return None, None, len(payload), None
-            w, h = int(m.group(1)), int(m.group(2))
-            pixels = payload[m.end():]
-            return w, h, len(payload), sum(pixels) % 65536
+    def parse(payload) -> tuple:
+        m = _HDR.match(payload)
+        if not m:  # not a PPM this decoder understands
+            return None, None, len(payload), None
+        w, h = int(m.group(1)), int(m.group(2))
+        pixels = payload[m.end():]
+        return w, h, len(payload), sum(pixels) % 65536
 
-        for pdf in batches:
-            rows = [parse(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_payload_bytes": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "pixel_checksum": pd.array(
-                        [r[3] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_payload_bytes", T.LongType()),
-            T.StructField("pixel_checksum", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(decode_batches, dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_ppm, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_row_kernel(parse, [
+        ("width", _INT), ("height", _INT), ("n_payload_bytes", _LONG),
+        ("pixel_checksum", _INT),
+    ]))
 
 
 @query(
@@ -529,105 +501,58 @@ def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, NULL text -> NULL metrics."""
     import struct
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def to_bmp(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            w, h = 5 + n % 7, 4 + (n // 7) % 6
-            row = w * 3
-            stride = (row + 3) // 4 * 4
-            logical = tb[: w * h * 3].ljust(w * h * 3, b"\x00")
-            body = b"".join(
-                logical[r * row:(r + 1) * row].ljust(stride, b"\x00")
-                for r in reversed(range(h))
-            )
-            img_size = stride * h
-            hdr = b"BM" + struct.pack("<IHHI", 54 + img_size, 0, 0, 54)
-            dib = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-            )
-            return hdr + dib + body
+    def to_bmp(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        w, h = 5 + n % 7, 4 + (n // 7) % 6
+        row = w * 3
+        stride = (row + 3) // 4 * 4
+        logical = tb[: w * h * 3].ljust(w * h * 3, b"\x00")
+        body = b"".join(
+            logical[r * row:(r + 1) * row].ljust(stride, b"\x00")
+            for r in reversed(range(h))
+        )
+        img_size = stride * h
+        hdr = b"BM" + struct.pack("<IHHI", 54 + img_size, 0, 0, 54)
+        dib = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
+        )
+        return hdr + dib + body
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_bmp(t) for t in pdf["text"]],
-                }
-            )
+    def parse(payload) -> tuple:
+        if len(payload) < 54 or payload[:2] != b"BM":
+            return None, None, None, len(payload), False, None
+        file_size, _, _, off = struct.unpack_from("<IHHI", payload, 2)
+        hdr_sz, w, h, _, bpp, comp, img_size = struct.unpack_from(
+            "<IiiHHII", payload, 14
+        )
+        stride = (w * 3 + 3) // 4 * 4
+        consistent = (
+            file_size == len(payload)
+            and off == 54
+            and hdr_sz == 40
+            and bpp == 24
+            and comp == 0
+            and img_size == stride * h
+            and len(payload) == 54 + stride * h
+        )
+        wsum, idx = 0, 0
+        for r in range(h):  # logical top-down; stored bottom-up
+            start = off + (h - 1 - r) * stride
+            for byte in payload[start:start + w * 3]:
+                idx += 1
+                wsum += idx * byte
+        return w, h, stride, len(payload), consistent, wsum % 65536
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(payload) -> tuple:
-            if payload is None:
-                return None, None, None, None, None, None
-            if len(payload) < 54 or payload[:2] != b"BM":
-                return None, None, None, len(payload), False, None
-            file_size, _, _, off = struct.unpack_from("<IHHI", payload, 2)
-            hdr_sz, w, h, _, bpp, comp, img_size = struct.unpack_from(
-                "<IiiHHII", payload, 14
-            )
-            stride = (w * 3 + 3) // 4 * 4
-            consistent = (
-                file_size == len(payload)
-                and off == 54
-                and hdr_sz == 40
-                and bpp == 24
-                and comp == 0
-                and img_size == stride * h
-                and len(payload) == 54 + stride * h
-            )
-            wsum, idx = 0, 0
-            for r in range(h):  # logical top-down; stored bottom-up
-                start = off + (h - 1 - r) * stride
-                for byte in payload[start:start + w * 3]:
-                    idx += 1
-                    wsum += idx * byte
-            return w, h, stride, len(payload), consistent, wsum % 65536
-
-        for pdf in batches:
-            rows = [parse(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "row_stride": pd.array(
-                        [r[2] for r in rows], dtype="Int32"
-                    ),
-                    "n_file_bytes": pd.array(
-                        [r[3] for r in rows], dtype="Int64"
-                    ),
-                    "header_consistent": pd.array(
-                        [r[4] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("row_stride", T.IntegerType()),
-            T.StructField("n_file_bytes", T.LongType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(decode_batches, dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_bmp, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_row_kernel(parse, [
+        ("width", _INT), ("height", _INT), ("row_stride", _INT),
+        ("n_file_bytes", _LONG), ("header_consistent", _BOOL),
+        ("pixel_checksum_weighted", _INT),
+    ]))
 
 
 @query(
@@ -715,141 +640,100 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no shuffle anywhere."""
     import struct
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def to_wav(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            rate = 8000 + (n % 5) * 2000
-            data = tb + (b"\x00" if n % 2 else b"")
-            fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-            jl = 3 + n % 6
-            junk = b"\xa5" * jl + (b"\x00" if jl % 2 else b"")
-            riff_size = 4 + 8 + len(fmt) + 8 + len(junk) + 8 + len(data)
-            return (
-                b"RIFF" + struct.pack("<I", riff_size) + b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"LIST" + struct.pack("<I", jl) + junk
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
+    def to_wav(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        rate = 8000 + (n % 5) * 2000
+        data = tb + (b"\x00" if n % 2 else b"")
+        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+        jl = 3 + n % 6
+        junk = b"\xa5" * jl + (b"\x00" if jl % 2 else b"")
+        riff_size = 4 + 8 + len(fmt) + 8 + len(junk) + 8 + len(data)
+        return (
+            b"RIFF" + struct.pack("<I", riff_size) + b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"LIST" + struct.pack("<I", jl) + junk
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_wav(t) for t in pdf["text"]],
-                }
-            )
+    def parse(payload) -> tuple:
+        if len(payload) < 12 or payload[:4] != b"RIFF" \
+                or payload[8:12] != b"WAVE":
+            return None, None, len(payload), False, None, None
+        (riff_size,) = struct.unpack_from("<I", payload, 4)
+        fmt_fields, data = None, None
+        off = 12
+        while off + 8 <= len(payload):  # the chunk walk
+            cid = payload[off:off + 4]
+            (size,) = struct.unpack_from("<I", payload, off + 4)
+            body = payload[off + 8:off + 8 + size]
+            if cid == b"fmt " and size >= 16:
+                fmt_fields = struct.unpack_from("<HHIIHH", body, 0)
+            elif cid == b"data":
+                data = body
+            off += 8 + size + size % 2  # RIFF word-alignment pad
+        if fmt_fields is None or data is None:
+            return None, None, len(payload), False, None, None
+        tag, ch, rate, byte_rate, block_align, bits = fmt_fields
+        consistent = (
+            riff_size == len(payload) - 8
+            and tag == 1 and ch == 1 and bits == 16
+            and block_align == 2 and byte_rate == rate * 2
+            and len(data) % 2 == 0
+        )
+        sv = struct.unpack("<%dh" % (len(data) // 2), data)
+        return (
+            rate,
+            len(sv),
+            len(payload),
+            consistent,
+            sum(sv),
+            max((abs(x) for x in sv), default=None),
+        )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(payload) -> tuple:
-            if payload is None:
-                return None, None, None, None, None, None
-            if len(payload) < 12 or payload[:4] != b"RIFF" \
-                    or payload[8:12] != b"WAVE":
-                return None, None, len(payload), False, None, None
-            (riff_size,) = struct.unpack_from("<I", payload, 4)
-            fmt_fields, data = None, None
-            off = 12
-            while off + 8 <= len(payload):  # the chunk walk
-                cid = payload[off:off + 4]
-                (size,) = struct.unpack_from("<I", payload, off + 4)
-                body = payload[off + 8:off + 8 + size]
-                if cid == b"fmt " and size >= 16:
-                    fmt_fields = struct.unpack_from("<HHIIHH", body, 0)
-                elif cid == b"data":
-                    data = body
-                off += 8 + size + size % 2  # RIFF word-alignment pad
-            if fmt_fields is None or data is None:
-                return None, None, len(payload), False, None, None
-            tag, ch, rate, byte_rate, block_align, bits = fmt_fields
-            consistent = (
-                riff_size == len(payload) - 8
-                and tag == 1 and ch == 1 and bits == 16
-                and block_align == 2 and byte_rate == rate * 2
-                and len(data) % 2 == 0
-            )
-            sv = struct.unpack("<%dh" % (len(data) // 2), data)
-            return (
-                rate,
-                len(sv),
-                len(payload),
-                consistent,
-                sum(sv),
-                max((abs(x) for x in sv), default=None),
-            )
-
-        for pdf in batches:
-            rows = [parse(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "sample_rate": pd.array(
-                        [r[0] for r in rows], dtype="Int32"
-                    ),
-                    "n_samples": pd.array(
-                        [r[1] for r in rows], dtype="Int64"
-                    ),
-                    "n_file_bytes": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "header_consistent": pd.array(
-                        [r[3] for r in rows], dtype="boolean"
-                    ),
-                    "sample_sum": pd.array(
-                        [r[4] for r in rows], dtype="Int64"
-                    ),
-                    "peak_abs": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_file_bytes", T.LongType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("sample_sum", T.LongType()),
-            T.StructField("peak_abs", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(decode_batches, dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_wav, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_row_kernel(parse, [
+        ("sample_rate", _INT), ("n_samples", _LONG), ("n_file_bytes", _LONG),
+        ("header_consistent", _BOOL), ("sample_sum", _LONG),
+        ("peak_abs", _INT),
+    ]))
 
 
-def _make_png_decoder():
-    """Factory for mm_decode_png's decode stage. Returned as a CLOSURE
-    (not a module-level function) so cloudpickle serializes it BY VALUE
-    — the driver contract runs executors whose PYTHONPATH may not
-    include this repo, so executor-side kernels must never be pickled
-    by module reference (the codec-family convention). Module-level
-    factory so tests can drive the exact kernel with FOREIGN payloads
-    (level-9 zlib, split IDATs, arbitrary filter plans) that the
-    engine's own level-0 single-IDAT encoder never emits."""
-    import struct
-    import zlib
+def _png_paeth():
+    """Factory for the PNG Paeth predictor shared by mm_decode_png's
+    encoder and decoder, returned as a closure so both kernels pickle
+    it by value: the one of left (a), up (b) and up-left (c) closest to
+    a + b - c, ties in that order."""
 
-    def _paeth(a: int, b: int, c: int) -> int:
+    def paeth(a: int, b: int, c: int) -> int:
         p = a + b - c
         pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
         if pa <= pb and pa <= pc:
             return a
         return b if pb <= pc else c
 
+    return paeth
+
+
+def _make_png_decoder():
+    """Factory for mm_decode_png's decode stage, returning
+    ``_row_kernel``'s (kernel, schema). The kernel is a CLOSURE (not a
+    module-level function) so cloudpickle serializes it BY VALUE — the
+    driver contract runs executors whose PYTHONPATH may not include
+    this repo, so executor-side kernels must never be pickled by module
+    reference (the codec-family convention). Module-level factory so
+    tests can drive the exact kernel with FOREIGN payloads (level-9
+    zlib, split IDATs, arbitrary filter plans) that the engine's own
+    level-0 single-IDAT encoder never emits."""
+    import struct
+    import zlib
+
+    paeth = _png_paeth()
+
     def parse(payload) -> tuple:
-        if payload is None:
-            return None, None, None, None, None, None
         bad = (None, None, len(payload), None, False, None)
         if len(payload) < 8 or bytes(payload[:8]) != b"\x89PNG\r\n\x1a\n":
             return bad
@@ -912,7 +796,7 @@ def _make_png_decoder():
                 elif ft == 3:
                     x = f[i] + ((left + prior[i]) >> 1)
                 elif ft == 4:
-                    x = f[i] + _paeth(
+                    x = f[i] + paeth(
                         left, prior[i], prior[i - 3] if i >= 3 else 0
                     )
                 else:
@@ -928,34 +812,11 @@ def _make_png_decoder():
             wsum % 65536,
         )
 
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [parse(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_file_bytes": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "filters_used": pd.array(
-                        [r[3] for r in rows], dtype="Int32"
-                    ),
-                    "header_consistent": pd.array(
-                        [r[4] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return decode_batches
+    return _row_kernel(parse, [
+        ("width", _INT), ("height", _INT), ("n_file_bytes", _LONG),
+        ("filters_used", _INT), ("header_consistent", _BOOL),
+        ("pixel_checksum_weighted", _INT),
+    ])
 
 
 @query(
@@ -1039,100 +900,69 @@ def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
     import zlib
 
-    def _paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
+    paeth = _png_paeth()
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
+    def chunk(typ: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+        )
 
-        def to_png(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            w, h = 4 + n % 8, 3 + (n // 5) % 7
-            row = w * 3
-            logical = tb[: w * h * 3].ljust(w * h * 3, b"\x00")
-            prior = bytes(row)
-            filtered = bytearray()
-            for r in range(h):
-                raw = logical[r * row:(r + 1) * row]
-                ft = r % 5
-                filtered.append(ft)
-                if ft == 0:
-                    filtered += raw
-                elif ft == 1:  # Sub
-                    filtered += bytes(
-                        (raw[i] - (raw[i - 3] if i >= 3 else 0)) & 0xFF
-                        for i in range(row)
-                    )
-                elif ft == 2:  # Up
-                    filtered += bytes(
-                        (raw[i] - prior[i]) & 0xFF for i in range(row)
-                    )
-                elif ft == 3:  # Average (floor((left+up)/2))
-                    filtered += bytes(
-                        (raw[i] - (
-                            ((raw[i - 3] if i >= 3 else 0) + prior[i]) >> 1
-                        )) & 0xFF
-                        for i in range(row)
-                    )
-                else:  # Paeth
-                    filtered += bytes(
-                        (raw[i] - _paeth(
-                            raw[i - 3] if i >= 3 else 0,
-                            prior[i],
-                            prior[i - 3] if i >= 3 else 0,
-                        )) & 0xFF
-                        for i in range(row)
-                    )
-                prior = raw
-            # level 0 -> stored blocks: exact 11 + m bytes for m < 65531
-            idat = zlib.compress(bytes(filtered), 0)
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", idat)
-                + chunk(b"IEND", b"")
-            )
+    def to_png(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        w, h = 4 + n % 8, 3 + (n // 5) % 7
+        row = w * 3
+        logical = tb[: w * h * 3].ljust(w * h * 3, b"\x00")
+        prior = bytes(row)
+        filtered = bytearray()
+        for r in range(h):
+            raw = logical[r * row:(r + 1) * row]
+            ft = r % 5
+            filtered.append(ft)
+            if ft == 0:
+                filtered += raw
+            elif ft == 1:  # Sub
+                filtered += bytes(
+                    (raw[i] - (raw[i - 3] if i >= 3 else 0)) & 0xFF
+                    for i in range(row)
+                )
+            elif ft == 2:  # Up
+                filtered += bytes(
+                    (raw[i] - prior[i]) & 0xFF for i in range(row)
+                )
+            elif ft == 3:  # Average (floor((left+up)/2))
+                filtered += bytes(
+                    (raw[i] - (
+                        ((raw[i - 3] if i >= 3 else 0) + prior[i]) >> 1
+                    )) & 0xFF
+                    for i in range(row)
+                )
+            else:  # Paeth
+                filtered += bytes(
+                    (raw[i] - paeth(
+                        raw[i - 3] if i >= 3 else 0,
+                        prior[i],
+                        prior[i - 3] if i >= 3 else 0,
+                    )) & 0xFF
+                    for i in range(row)
+                )
+            prior = raw
+        # level 0 -> stored blocks: exact 11 + m bytes for m < 65531
+        idat = zlib.compress(bytes(filtered), 0)
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", idat)
+            + chunk(b"IEND", b"")
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_png(t) for t in pdf["text"]],
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_file_bytes", T.LongType()),
-            T.StructField("filters_used", T.IntegerType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(_make_png_decoder(), dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_png, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_make_png_decoder())
 
 
 def _make_gif_decoder():
@@ -1203,8 +1033,6 @@ def _make_gif_decoder():
             prev = entry
 
     def parse(payload) -> tuple:
-        if payload is None:
-            return None, None, None, None, None
         payload = bytes(payload)
         bad = (None, None, len(payload), False, None)
         if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
@@ -1265,31 +1093,10 @@ def _make_gif_decoder():
             wsum += (i + 1) * px
         return iw, ih, len(payload), bool(consistent), wsum % 65536
 
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [parse(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_file_bytes": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "header_consistent": pd.array(
-                        [r[3] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[4] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return decode_batches
+    return _row_kernel(parse, [
+        ("width", _INT), ("height", _INT), ("n_file_bytes", _LONG),
+        ("header_consistent", _BOOL), ("pixel_checksum_weighted", _INT),
+    ])
 
 
 @query(
@@ -1367,76 +1174,51 @@ def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages over one documents scan, no shuffle."""
     import struct
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # constant grayscale color table — hoisted out of to_gif (r17:
-        # the per-image genexpr was 3.8M iterations per sf0.1 task)
-        gct = bytes(v for i in range(256) for v in (i, i, i))
+    # constant grayscale color table — hoisted out of to_gif (r17: the
+    # per-image genexpr was 3.8M iterations per sf0.1 task)
+    gct = bytes(v for i in range(256) for v in (i, i, i))
 
-        def to_gif(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            w, h = 3 + n % 9, 2 + (n // 3) % 8
-            m = w * h
-            pixels = tb[:m].ljust(m, b"\x00")
-            codes = [256]  # initial CLEAR
-            for i in range(0, m, 254):
-                if i:
-                    codes.append(256)
-                codes.extend(pixels[i:i + 254])
-            codes.append(257)  # END
-            acc = bitlen = 0
-            out = bytearray()
-            for c in codes:  # 9-bit LSB-first packing
-                acc |= c << bitlen
-                bitlen += 9
-                while bitlen >= 8:
-                    out.append(acc & 0xFF)
-                    acc >>= 8
-                    bitlen -= 8
-            if bitlen:
+    def to_gif(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        w, h = 3 + n % 9, 2 + (n // 3) % 8
+        m = w * h
+        pixels = tb[:m].ljust(m, b"\x00")
+        codes = [256]  # initial CLEAR
+        for i in range(0, m, 254):
+            if i:
+                codes.append(256)
+            codes.extend(pixels[i:i + 254])
+        codes.append(257)  # END
+        acc = bitlen = 0
+        out = bytearray()
+        for c in codes:  # 9-bit LSB-first packing
+            acc |= c << bitlen
+            bitlen += 9
+            while bitlen >= 8:
                 out.append(acc & 0xFF)
-            parts = [
-                b"GIF87a",
-                struct.pack("<HHBBB", w, h, 0xF7, 0, 0),
-                gct,
-                struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0),
-                bytes([8]),  # LZW min code size
-            ]
-            for i in range(0, len(out), 255):
-                blk = out[i:i + 255]
-                parts.append(bytes([len(blk)]) + bytes(blk))
-            parts.append(b"\x00\x3b")
-            return b"".join(parts)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_gif(t) for t in pdf["text"]],
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
+                acc >>= 8
+                bitlen -= 8
+        if bitlen:
+            out.append(acc & 0xFF)
+        parts = [
+            b"GIF87a",
+            struct.pack("<HHBBB", w, h, 0xF7, 0, 0),
+            gct,
+            struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0),
+            bytes([8]),  # LZW min code size
         ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_file_bytes", T.LongType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
+        for i in range(0, len(out), 255):
+            blk = out[i:i + 255]
+            parts.append(bytes([len(blk)]) + bytes(blk))
+        parts.append(b"\x00\x3b")
+        return b"".join(parts)
+
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(_make_gif_decoder(), dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_gif, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_make_gif_decoder())
 
 
 # --- JPEG (sixth codec: baseline JFIF — huffman entropy + DCT family) -------
@@ -1496,13 +1278,13 @@ def jpeg_canonical_codes(bits, vals):
 
 
 def _jpeg_entropy_tools():
-    """Shared JPEG entropy-decode kernel for the three decoders
-    (grayscale / color / progressive): an accumulator BitReader plus a
+    """JPEG entropy-decode kernel of the JFIF reader
+    (_make_jpeg_reader): an accumulator BitReader plus a
     16-bit table-lookup Huffman decoder (r18 optimization, guide §4.2 —
     the r17 profile still showed 0.67 M per-bit Python calls per color
     task; this removes the per-bit loop entirely).
 
-    Called INSIDE each decoder factory so every object here is a
+    Called INSIDE the reader factory so every object here is a
     closure-local dynamic class/function that cloudpickle serializes BY
     VALUE — executors never import this repo (the codec-family
     convention).
@@ -1722,23 +1504,46 @@ def _jpeg_entropy_tools():
     return BitReader, build_decode, decode_huff, extend
 
 
-def _make_jpeg_decoder():
-    """Factory for mm_decode_jpeg's decode stage (closure =>
-    cloudpickle by-value, the codec-family convention). The decoder is
-    a GENERAL baseline-grayscale JFIF reader, not an inverse of the
-    engine's DC-only encoder: marker walk (APPn/COM skip, multi-table
-    DQT incl. 16-bit precision, multi-table DHT, SOF0, DRI), canonical
-    Huffman decode of the entropy scan with 0xFF00 byte-unstuffing and
-    RSTn restart handling (DC predictor reset + byte realign), JPEG
-    EXTEND sign recovery, run-length AC with ZRL and EOB, dequantize,
-    inverse zigzag, and a real separable float IDCT (numpy) with
-    round-and-clamp — foreign payloads with dense AC coefficients
-    decode exactly (pinned in tests against an independent numpy IDCT).
+def _make_jpeg_reader(sof, ncomps, rgb, counts):
+    """Factory for the decode stage of all three JPEG queries: ONE
+    general JFIF reader, returning ``_row_kernel``'s (kernel, schema)
+    (closure => cloudpickle by-value, the codec-family convention). Not
+    an inverse of the engine's DC-only encoders:
 
-    Progressive (SOF2) / arithmetic / multi-component scans return the
-    diagnostic row: the registered contract is baseline grayscale.
-    Truncated/forged structures return the diagnostic row, never a
-    crash (the r15-advice codec rule; broad guard on parse)."""
+    - one marker walk: APPn/COM skip, multi-table DQT in 8- and 16-bit
+      precision, multi-table DHT, SOF0/SOF2 with any integer-ratio
+      sampling grid, DRI, SOS, EOI;
+    - one scan loop into per-component COEFFICIENT buffers, over
+      interleaved MCUs or a single component's blocks (T.81 A.2): DC
+      first (point-transformed diffs deposited << Al) and DC refine (one
+      raw bit); AC first with run-length zeros, ZRL, EXTEND signs and,
+      under SOF2, EOBRUN across blocks; AC refine (the G.1.2.3
+      correction-bit walk, also inside EOBRUN tails); RSTn restarts
+      reset predictors, EOBRUN and bit alignment. A baseline scan is
+      the one-scan case, Ss=0 Se=63 Ah=Al=0;
+    - one reconstruction: dequantize, inverse zigzag, separable float
+      IDCT per block with the bit-identical DC-only fast path (the
+      other 63 matmul terms are exact float zeros, so (a*F00)*a is the
+      full IDCT — libjpeg's 1-coefficient path), nearest-replication
+      upsampling, and libjpeg-style FIXED-POINT YCbCr->RGB:
+
+        R = Y + ((91881*Cr' + 32768) >> 16)
+        G = Y - ((22554*Cb' + 46802*Cr' + 32768) >> 16)
+        B = Y + ((116130*Cb' + 32768) >> 16)     (Cx' = Cx - 128)
+
+      integer arithmetic the SQL oracle replicates bit-for-bit (a float
+      1.402-style conversion would hand the driver hash a
+      rounding-boundary lottery).
+
+    Each query's contract is data: ``sof`` the one SOF marker it accepts
+    (0xC0 baseline, 0xC2 progressive), ``ncomps`` its component counts,
+    ``rgb`` whether the position-weighted checksum runs over the
+    RGB-INTERLEAVED buffer (channel-order and upsampling defects go
+    hash-red) or the gray plane, and ``counts`` its count columns:
+    "n_blocks"/"n_mcus" (MCUs of the first scan) and "n_scans".
+    Anything outside the contract, and every truncated or forged
+    structure, returns the diagnostic row, never a crash (the
+    r15-advice codec rule; broad guard on parse)."""
     import math
     import struct
 
@@ -1746,11 +1551,8 @@ def _make_jpeg_decoder():
 
     # Bind the module-level table to a LOCAL so the closure pickles it
     # BY VALUE — a module-attribute reference would make executors
-    # import this repo, which a plain driver session's workers cannot
-    # (the codec-family closure convention).
-    zigzag = list(JPEG_ZIGZAG)
-    unzig = np.argsort(np.array(zigzag))  # once, not per dense block
-
+    # import this repo, which a plain driver session's workers cannot.
+    unzig = np.argsort(np.array(JPEG_ZIGZAG))
     # IDCT basis: A[x, u] = 0.5 * C(u) * cos((2x+1) u pi / 16);
     # spatial = A @ F @ A.T
     _A = np.array(
@@ -1763,58 +1565,132 @@ def _make_jpeg_decoder():
             for x in range(8)
         ]
     )
-
-    # Accumulator BitReader + 16-bit LUT Huffman decoder, shared across
-    # the three JPEG decoders (r18, guide §4.2) — see _jpeg_entropy_tools
-    # for the bit-exactness argument. Instantiated INSIDE the factory so
-    # everything still pickles by value.
+    a00 = float(_A[0, 0])
+    # Accumulator BitReader + 16-bit LUT Huffman decoder (r18, guide
+    # §4.2) — see _jpeg_entropy_tools for the bit-exactness argument.
+    # Instantiated INSIDE the factory so everything pickles by value.
     BitReader, build_decode, decode_huff, extend = _jpeg_entropy_tools()
+    progressive = sof == 0xC2
+    bad = (None, None) + (None,) * len(counts) + (False, None)
+
+    def scan(br, blocks, per_mcu, coefs, dcs, acs, ri, ss, se, ah, al):
+        """Decode one entropy segment into the coefficient buffers.
+        ``blocks`` lists (scan component, block index) in coding order,
+        ``per_mcu`` of them per MCU; restarts come every ``ri`` MCUs."""
+        preds = [0] * len(coefs)
+        eobrun = 0
+        p1, m1 = 1 << al, -1 << al
+        for t, (j, bi) in enumerate(blocks):
+            if ri and t and t % (ri * per_mcu) == 0:
+                br.byte_align()
+                mk = br.peek_marker()
+                if mk is None or not (0xD0 <= mk <= 0xD7):
+                    raise ValueError("missing restart marker")
+                br.skip_marker()
+                preds = [0] * len(coefs)
+                eobrun = 0
+            # coefficients live in SCAN (zigzag) order, like the
+            # DQT; natural order is restored once, at reconstruction
+            coef = coefs[j]
+            if ss == 0:  # DC
+                if ah == 0:
+                    s = decode_huff(br, dcs[j])
+                    preds[j] += extend(br.read_bits(s), s)
+                    coef[bi, 0] = preds[j] << al
+                elif br.read_bit():  # DC refinement: one raw bit
+                    coef[bi, 0] |= p1
+            if not se:
+                continue
+            k = ss or 1
+            if ah == 0:  # AC first (every baseline block)
+                if eobrun:
+                    eobrun -= 1
+                    continue
+                while k <= se:
+                    rs = decode_huff(br, acs[j])
+                    r, s = rs >> 4, rs & 0x0F
+                    if s == 0:
+                        if r != 15:  # EOB; EOBn under SOF2
+                            if progressive and r:
+                                eobrun = (1 << r) - 1 + br.read_bits(r)
+                            break
+                        k += 16  # ZRL
+                        continue
+                    k += r
+                    if k > se:
+                        raise ValueError("AC run past the band")
+                    coef[bi, k] = extend(br.read_bits(s), s) << al
+                    k += 1
+                continue
+            # AC refinement (G.1.2.3)
+            c = coef[bi]
+            if eobrun == 0:
+                while k <= se:
+                    rs = decode_huff(br, acs[j])
+                    r, s = rs >> 4, rs & 0x0F
+                    if s == 0:
+                        if r != 15:  # EOBn: this block's tail below
+                            eobrun = 1 << r
+                            if r:
+                                eobrun += br.read_bits(r)
+                            break
+                        # ZRL: skip 16 zero-history lanes,
+                        # correcting nonzeros on the way
+                    elif s == 1:
+                        newval = p1 if br.read_bit() else m1
+                    else:
+                        raise ValueError("refine size must be 1")
+                    while k <= se:
+                        if c[k] != 0:
+                            if br.read_bit() and not (c[k] & p1):
+                                c[k] += p1 if c[k] > 0 else m1
+                        else:
+                            if r == 0:
+                                if s:
+                                    c[k] = newval
+                                k += 1
+                                break
+                            r -= 1
+                        k += 1
+            if eobrun > 0:
+                while k <= se:
+                    if c[k] != 0:
+                        if br.read_bit() and not (c[k] & p1):
+                            c[k] += p1 if c[k] > 0 else m1
+                    k += 1
+                eobrun -= 1
 
     def parse(payload):
-        if payload is None:
-            return None, None, None, None, None
-        bad = (None, None, None, False, None)
         p = bytes(payload)
         try:
             if len(p) < 4 or p[:2] != b"\xff\xd8":
                 return bad
             pos = 2
-            qtables = {}
-            dc_tables = {}
-            ac_tables = {}
-            w = h = None
-            qsel = None
-            restart_interval = 0
-            while True:
-                if pos + 4 > len(p):
-                    return bad
-                if p[pos] != 0xFF:
-                    return bad
+            qtables, dc_tables, ac_tables = {}, {}, {}
+            comps = None  # per frame component: (H, V, quant table id)
+            ri = n_scans = n_mcus = 0
+            # the walk ends at EOI, after a baseline frame's one scan, or
+            # where the stream stops being a marker sequence
+            while (
+                pos + 2 <= len(p) and p[pos] == 0xFF and p[pos + 1] != 0xD9
+            ):
                 m = p[pos + 1]
-                if m == 0xD9:  # EOI before SOS: no image
-                    return bad
                 (seglen,) = struct.unpack_from(">H", p, pos + 2)
                 seg = p[pos + 4:pos + 2 + seglen]
                 if len(seg) != seglen - 2:
                     return bad
+                pos += 2 + seglen
                 if m == 0xDB:  # DQT, possibly several tables
                     off = 0
                     while off < len(seg):
                         pq, tq = seg[off] >> 4, seg[off] & 0x0F
-                        off += 1
-                        if pq == 0:
-                            if off + 64 > len(seg):
-                                return bad
-                            qtables[tq] = list(seg[off:off + 64])
-                            off += 64
-                        else:  # 16-bit precision
-                            if off + 128 > len(seg):
-                                return bad
-                            qtables[tq] = [
-                                (seg[off + 2 * i] << 8) | seg[off + 2 * i + 1]
-                                for i in range(64)
-                            ]
-                            off += 128
+                        size = 128 if pq else 64  # 16- or 8-bit entries
+                        if off + 1 + size > len(seg):
+                            return bad
+                        qtables[tq] = struct.unpack_from(
+                            ">64H" if pq else "64B", seg, off + 1
+                        )
+                        off += 1 + size
                 elif m == 0xC4:  # DHT, possibly several tables
                     off = 0
                     while off < len(seg):
@@ -1824,159 +1700,251 @@ def _make_jpeg_decoder():
                         vals = list(seg[off + 17:off + 17 + nv])
                         if len(vals) != nv:
                             return bad
-                        t = build_decode(bits, vals)
-                        if tc == 0:
-                            dc_tables[th] = t
-                        else:
-                            ac_tables[th] = t
-                        off += 17 + nv
-                elif m == 0xC0:  # SOF0 baseline
-                    if seg[0] != 8:
-                        return bad
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    ncomp = seg[5]
-                    if ncomp != 1:
-                        return bad  # grayscale contract
-                    if seg[7] != 0x11:
-                        return bad  # no subsampling with 1 component
-                    qsel = seg[8]
-                elif m in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                           0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    return bad  # non-baseline SOF
-                elif m == 0xDD:  # DRI
-                    (restart_interval,) = struct.unpack_from(">H", seg, 0)
-                elif m == 0xDA:  # SOS
-                    if w is None or seg[0] != 1:
-                        return bad
-                    td, ta = seg[2] >> 4, seg[2] & 0x0F
-                    if (
-                        td not in dc_tables
-                        or ta not in ac_tables
-                        or qsel not in qtables
-                    ):
-                        return bad
-                    pos = pos + 2 + seglen
-                    break
-                # APPn / COM / anything else with a length: skip
-                pos = pos + 2 + seglen
-
-            q = qtables[qsel]
-            dct, act = dc_tables[td], ac_tables[ta]
-            bw, bh = (w + 7) // 8, (h + 7) // 8
-            img = np.zeros((bh * 8, bw * 8), dtype=np.int64)
-            br = BitReader(p, pos)
-            pred = 0
-            mcu = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if (
-                        restart_interval
-                        and mcu
-                        and mcu % restart_interval == 0
-                    ):
-                        br.byte_align()
-                        mk = br.peek_marker()
-                        if mk is None or not (0xD0 <= mk <= 0xD7):
-                            return bad
-                        br.skip_marker()
-                        pred = 0
-                    # coeff buffer allocated LAZILY (r17): DC-only
-                    # blocks — the common case — never touch it
-                    s = decode_huff(br, dct)
-                    diff = extend(br.read_bits(s), s)
-                    pred += diff
-                    coeffs = None
-                    k = 1
-                    while k < 64:
-                        rs = decode_huff(br, act)
-                        r, size = rs >> 4, rs & 0x0F
-                        if size == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            return bad
-                        if coeffs is None:
-                            coeffs = np.zeros(64, dtype=np.int64)
-                        coeffs[k] = extend(br.read_bits(size), size)
-                        k += 1
-                    if k == 1:
-                        # DC-only block: the matmul's other 63 terms are
-                        # exact float zeros, so the constant (a*F00)*a
-                        # (a = A[0,0]) is bit-identical to the full IDCT
-                        # — libjpeg's 1-coefficient IDCT fast path
-                        a = float(_A[0, 0])
-                        c = min(
-                            255,
-                            max(0, round((a * float(pred * q[0])) * a)
-                                + 128),
+                        (ac_tables if tc else dc_tables)[th] = (
+                            build_decode(bits, vals)
                         )
-                        img[by * 8:(by + 1) * 8,
-                            bx * 8:(bx + 1) * 8] = int(c)
-                        mcu += 1
-                        continue
-                    if coeffs is None:  # ZRL-advanced, no nonzero AC
-                        coeffs = np.zeros(64, dtype=np.int64)
-                    coeffs[0] = pred
-                    fq = (
-                        coeffs * np.array(q, dtype=np.int64)
-                    )[unzig].reshape(8, 8)
+                        off += 17 + nv
+                elif 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
+                    if m != sof or seg[0] != 8 or seg[5] not in ncomps:
+                        return bad  # another SOF type or out of contract
+                    h, w = struct.unpack_from(">HH", seg, 1)
+                    ids = list(seg[6:6 + 3 * seg[5]:3])
+                    comps = [
+                        (seg[7 + 3 * i] >> 4, seg[7 + 3 * i] & 0x0F,
+                         seg[8 + 3 * i])
+                        for i in range(seg[5])
+                    ]
+                    hmax = max(c[0] for c in comps)
+                    vmax = max(c[1] for c in comps)
+                    if any(H < 1 or V < 1 or hmax % H or vmax % V
+                           for H, V, _ in comps):
+                        return bad  # non-integer upsampling ratio
+                    mcus_x = -(-w // (8 * hmax))
+                    mcus_y = -(-h // (8 * vmax))
+                    coefs = [
+                        np.zeros((mcus_y * V * mcus_x * H, 64), np.int64)
+                        for H, V, _ in comps
+                    ]
+                    scanned = set()
+                elif m == 0xDD:  # DRI
+                    (ri,) = struct.unpack_from(">H", seg, 0)
+                elif m == 0xDA:  # SOS: decode one scan
+                    if comps is None:
+                        return bad  # scan before any frame header
+                    ns = seg[0]
+                    sel = [
+                        (ids.index(seg[1 + 2 * i]), seg[2 + 2 * i])
+                        for i in range(ns)
+                    ]
+                    ss, se, a = seg[1 + 2 * ns:4 + 2 * ns]
+                    ah, al = a >> 4, a & 0x0F
+                    if not progressive:
+                        ss, se, ah, al = 0, 63, 0, 0
+                    elif se > 63 or ss > se or (ss == 0) != (se == 0):
+                        return bad  # DC scans are exactly Ss=Se=0
+                    if not ns or len({ci for ci, _ in sel}) != ns \
+                            or (ss and ns > 1):
+                        return bad  # AC bands are single-component
+                    for ci, t in sel:
+                        if (se and t & 0x0F not in ac_tables) or (
+                            ss == 0 and ah == 0 and t >> 4 not in dc_tables
+                        ):
+                            return bad  # the scan needs an undefined table
+                        scanned.add(ci)
+                    if ns == 1:  # non-interleaved: the component's blocks
+                        H, V, _ = comps[sel[0][0]]
+                        per_mcu = 1
+                        blocks = [
+                            (0, by * mcus_x * H + bx)
+                            for by in range(-(-h * V // (8 * vmax)))
+                            for bx in range(-(-w * H // (8 * hmax)))
+                        ]
+                    else:  # interleaved MCUs of H x V blocks per component
+                        per_mcu = sum(
+                            comps[ci][0] * comps[ci][1] for ci, _ in sel
+                        )
+                        blocks = [
+                            (j, (my * V + by) * mcus_x * H + mx * H + bx)
+                            for my in range(mcus_y)
+                            for mx in range(mcus_x)
+                            for j, (ci, _) in enumerate(sel)
+                            for H, V, _ in [comps[ci]]
+                            for by in range(V)
+                            for bx in range(H)
+                        ]
+                    br = BitReader(p, pos)
+                    scan(
+                        br, blocks, per_mcu,
+                        [coefs[ci] for ci, _ in sel],
+                        [dc_tables.get(t >> 4) for _, t in sel],
+                        [ac_tables.get(t & 0x0F) for _, t in sel],
+                        ri, ss, se, ah, al,
+                    )
+                    # drop the scan's pad bits and rewind prefetched
+                    # bytes: the next marker starts exactly at br.pos
+                    br.sync()
+                    pos = br.pos
+                    n_mcus = n_mcus or len(blocks) // per_mcu
+                    n_scans += 1
+                    if not progressive:
+                        break  # baseline: one scan, then EOI
+                # APPn / COM / anything else with a length: skip
+            if not n_scans or len(scanned) < len(comps) or (
+                progressive and p[pos:pos + 2] != b"\xff\xd9"
+            ):
+                return bad  # no image, a component never scanned, or a
+                # progressive stream cut before EOI
+            quant = [qtables.get(tq) for _, _, tq in comps]
+            if None in quant:
+                return bad  # a component's DQT never arrived
+            consistent = p[pos:] == b"\xff\xd9"
+            planes = []
+            for (H, V, _), coef, q in zip(comps, coefs, quant):
+                # every block starts as its DC-only constant: a level
+                # grid, replicated 8x and by the upsampling ratio
+                fy, fx = vmax // V, hmax // H
+                levels = [
+                    min(255, max(0, round((a00 * float(v * q[0])) * a00)
+                                 + 128))
+                    for v in coef[:, 0].tolist()
+                ]
+                plane = (
+                    np.array(levels, dtype=np.int64)
+                    .reshape(mcus_y * V, mcus_x * H)
+                    .repeat(8 * fy, axis=0).repeat(8 * fx, axis=1)
+                )
+                # then any block with AC energy gets the full IDCT
+                ac = coef[:, 1:]
+                has_ac = np.count_nonzero(ac)
+                for i in np.flatnonzero(ac.any(axis=1)) if has_ac else ():
+                    fq = (coef[i] * np.array(q))[unzig].reshape(8, 8)
                     spatial = _A @ fq.astype(np.float64) @ _A.T
-                    block = np.clip(np.round(spatial) + 128, 0, 255)
-                    img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = block
-                    mcu += 1
-            # after the scan: expect EOI. sync() drops the pad bits of a
-            # partially-consumed byte and rewinds prefetched-but-unused
-            # bytes, so the next marker starts exactly at br.pos (the
-            # old per-byte reader's invariant).
-            br.sync()
-            endpos = br.pos
-            consistent = (
-                endpos + 2 <= len(p)
-                and p[endpos:endpos + 2] == b"\xff\xd9"
-                and endpos + 2 == len(p)
-            )
-            cropped = img[:h, :w].reshape(-1)
-            wsum = int(
-                ((np.arange(cropped.size, dtype=np.int64) + 1) * cropped)
-                .sum()
-                % 65536
-            )
+                    by, bx = divmod(int(i), mcus_x * H)
+                    plane[
+                        by * 8 * fy:(by + 1) * 8 * fy,
+                        bx * 8 * fx:(bx + 1) * 8 * fx,
+                    ] = np.clip(np.round(spatial) + 128, 0, 255).repeat(
+                        fy, axis=0
+                    ).repeat(fx, axis=1)
+                planes.append(plane[:h, :w])
+            pix = planes[0]
+            if rgb:
+                if len(planes) == 3:
+                    Y, cb, cr = planes[0], planes[1] - 128, planes[2] - 128
+                    R = np.clip(Y + ((91881 * cr + 32768) >> 16), 0, 255)
+                    G = np.clip(
+                        Y - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255
+                    )
+                    B = np.clip(Y + ((116130 * cb + 32768) >> 16), 0, 255)
+                    pix = np.stack([R, G, B], axis=-1)
+                else:
+                    pix = pix[:, :, None].repeat(3, axis=2)
+            pix = pix.reshape(-1)
+            wsum = int(np.dot(np.arange(1, pix.size + 1), pix)) % 65536
+            count = {"n_blocks": n_mcus, "n_mcus": n_mcus, "n_scans": n_scans}
             return (
-                int(w),
-                int(h),
-                int(mcu),
-                bool(consistent),
-                wsum,
+                w, h, *(count[c] for c in counts), bool(consistent), wsum,
             )
-        except (struct.error, IndexError, ValueError):
+        except (struct.error, LookupError, ValueError, OverflowError):
             return bad
 
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    return _row_kernel(parse, [
+        ("width", _INT), ("height", _INT), *((c, _INT) for c in counts),
+        ("header_consistent", _BOOL), ("pixel_checksum_weighted", _INT),
+    ])
 
-        for pdf in batches:
-            rows = [parse(x) for x in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_blocks": pd.array([r[2] for r in rows], dtype="Int32"),
-                    "header_consistent": pd.array(
-                        [r[3] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[4] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
 
-    return decode_batches
+def _jfif_writer(sof, comps, n_qtables, ac_table):
+    """Factory for the encode stage of all three JPEG queries: ONE JFIF
+    writer, returned as a closure so it pickles by value. ``write(w, h,
+    scans)`` emits SOI, a JFIF APP0, one DQT segment holding
+    ``n_qtables`` copies of JPEG_QTABLE, the SOFn frame header for
+    ``comps`` = [(id, HV byte, quant table id)], two DHTs (the Annex K
+    DC table as table 0 and ``ac_table`` = (id, bits, vals)), then per
+    scan an SOS header and its entropy segment, then EOI.
+
+    A query keeps only its image content and its scan script: each scan
+    is (selectors, Ss, Se, Ah, Al, emit) with selectors = [(component
+    id, Td << 4 | Ta)], and ``emit(put, dc, ac)`` writes the scan's bits
+    — put(v, n) appends n raw bits, dc(i, v) codes v's category and
+    difference against scan component i's predictor (JPEG's
+    ones-complement negatives), ac(sym) one AC Huffman symbol. The bit
+    writer packs MSB-first, stuffs 0x00 after every 0xFF byte and
+    1-pads each scan's final byte."""
+    import struct
+
+    # Driver-side: derive the Huffman code assignments and copy every
+    # table into plain locals, so the closure captures VALUES and never
+    # needs this module importable on an executor.
+    ac_id, ac_bits, ac_vals = ac_table
+    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
+    ac_codes = jpeg_canonical_codes(ac_bits, ac_vals)
+    head = (
+        b"\xff\xd8\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
+        + struct.pack(">HH", 1, 1) + b"\x00\x00"
+        + b"\xff\xdb" + struct.pack(">H", 2 + 65 * n_qtables)
+        + b"".join(bytes([t, *JPEG_QTABLE]) for t in range(n_qtables))
+    )
+    frame = bytes([len(comps)]) + b"".join(bytes(c) for c in comps)
+    dht = b"".join(
+        b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), tc_th)
+        + bytes(bits) + bytes(vals)
+        for tc_th, bits, vals in (
+            (0x00, JPEG_DC_BITS, JPEG_DC_VALS),
+            (0x10 | ac_id, ac_bits, ac_vals),
+        )
+    )
+
+    def write(w: int, h: int, scans) -> bytes:
+        out = bytearray(head)
+        out += bytes([0xFF, sof]) + struct.pack(
+            ">HBHH", 8 + 3 * len(comps), 8, h, w
+        ) + frame + dht
+        acc = nacc = 0
+        preds = []
+
+        def put(v: int, nb: int) -> None:
+            nonlocal acc, nacc
+            acc = (acc << nb) | (v & ((1 << nb) - 1))
+            nacc += nb
+            while nacc >= 8:
+                nacc -= 8
+                byte = acc >> nacc
+                out.append(byte)
+                if byte == 0xFF:
+                    out.append(0x00)  # byte stuffing
+                acc &= (1 << nacc) - 1
+
+        def dc(i: int, v: int) -> None:
+            diff = v - preds[i]
+            preds[i] = v
+            cat = abs(diff).bit_length()
+            put(*dc_codes[cat])
+            if cat:
+                put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+
+        def ac(sym: int) -> None:
+            put(*ac_codes[sym])
+
+        for sel, ss, se, ah, al, emit in scans:
+            out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(sel), len(sel))
+            out += b"".join(bytes(s) for s in sel)
+            out += bytes([ss, se, ah << 4 | al])
+            preds = [0] * len(sel)
+            emit(put, dc, ac)
+            if nacc:
+                put((1 << (8 - nacc)) - 1, 8 - nacc)  # 1-pad
+        return bytes(out + b"\xff\xd9")
+
+    return write
+
+
+# Each JPEG query's decode contract, passed to the one reader as data.
+_JPEG_GRAY = dict(sof=0xC0, ncomps=(1,), rgb=False, counts=("n_blocks",))
+_JPEG_COLOR = dict(sof=0xC0, ncomps=(1, 3), rgb=True, counts=("n_mcus",))
+_JPEG_PROGRESSIVE = dict(
+    sof=0xC2, ncomps=(1,), rgb=False, counts=("n_blocks", "n_scans")
+)
 
 
 @query(
@@ -2032,10 +2000,11 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DHTs/SOS framing, the STANDARD T.81 Annex K luminance Huffman
     tables, category-coded DC differences with JPEG's ones-complement
     negative convention, per-block EOB, 0xFF byte-stuffing, 1-padded
-    final byte, EOI — and stage 2 DECODES it with a general baseline
-    grayscale reader (_make_jpeg_decoder: marker walk, canonical
-    Huffman, EXTEND, run-length AC with ZRL/EOB, dequantize, inverse
-    zigzag, separable float IDCT, restart-marker support).
+    final byte, EOI (the shared _jfif_writer) — and stage 2 DECODES it
+    with the general JFIF reader under the baseline-grayscale contract
+    (_make_jpeg_reader: marker walk, canonical Huffman, EXTEND,
+    run-length AC with ZRL/EOB, dequantize, inverse zigzag, separable
+    float IDCT, restart-marker support).
 
     Oracle strategy (exactness through a LOSSY format): each 8x8 block
     is CONSTANT — one gray level per block, taken from the text bytes —
@@ -2057,397 +2026,27 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages over one documents scan, payloads never cross an
     exchange, no shuffle anywhere (decode cost is the payload, not the
     plan)."""
-    import struct
-
-    # Driver-side: derive the Huffman code assignments and copy every
-    # table into plain locals, so encode_batches closes over VALUES and
-    # never needs this module importable on an executor.
-    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_codes = jpeg_canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
-    qtable_b = bytes(JPEG_QTABLE)
-    dc_bits_b, dc_vals_b = bytes(JPEG_DC_BITS), bytes(JPEG_DC_VALS)
-    ac_bits_b, ac_vals_b = bytes(JPEG_AC_BITS), bytes(JPEG_AC_VALS)
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eob_code, eob_len = ac_codes[0x00]
-
-        def to_jpeg(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            bw, bh = 1 + n % 4, 1 + (n // 7) % 3
-            w, h = 8 * bw, 8 * bh
-            ks = [tb[i % n] if n else 128 for i in range(bw * bh)]
-            out = bytearray(b"\xff\xd8")
-            out += (
-                b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00"
-                + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-            )
-            out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00"
-            out += qtable_b
-            out += (
-                b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
-                + struct.pack(">HH", h, w) + b"\x01" + bytes([1, 0x11, 0])
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(dc_vals_b))
-                + b"\x00" + dc_bits_b + dc_vals_b
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(ac_vals_b))
-                + b"\x10" + ac_bits_b + ac_vals_b
-            )
-            out += (
-                b"\xff\xda" + struct.pack(">H", 8) + b"\x01"
-                + bytes([1, 0x00]) + bytes([0, 63, 0])
-            )
-            entropy = bytearray()
-            acc, nacc = 0, 0
-
-            def put(v: int, nb: int) -> None:
-                nonlocal acc, nacc
-                acc = (acc << nb) | (v & ((1 << nb) - 1))
-                nacc += nb
-                while nacc >= 8:
-                    byte = (acc >> (nacc - 8)) & 0xFF
-                    entropy.append(byte)
-                    if byte == 0xFF:
-                        entropy.append(0x00)  # byte stuffing
-                    nacc -= 8
-                    acc &= (1 << nacc) - 1
-
-            pred = 0
-            for k in ks:
-                x = k - 128
-                diff = x - pred
-                pred = x
-                cat = abs(diff).bit_length()
-                ccode, clen = dc_codes[cat]
-                put(ccode, clen)
-                if cat:
-                    put(
-                        diff if diff >= 0 else diff + (1 << cat) - 1,
-                        cat,
-                    )
-                put(eob_code, eob_len)
-            if nacc:
-                put((1 << (8 - nacc)) - 1, 8 - nacc)  # 1-pad
-            out += entropy + b"\xff\xd9"
-            return bytes(out)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_jpeg(t) for t in pdf["text"]],
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+    write = _jfif_writer(
+        0xC0, [(1, 0x11, 0)], 1, (0, JPEG_AC_BITS, JPEG_AC_VALS)
     )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_blocks", T.IntegerType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
+
+    def to_jpeg(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        bw, bh = 1 + n % 4, 1 + (n // 7) % 3
+
+        def emit(put, dc, ac):
+            for i in range(bw * bh):  # block i: one gray level, DC only
+                dc(0, (tb[i % n] if n else 128) - 128)
+                ac(0x00)  # EOB
+
+        return write(8 * bw, 8 * bh, [([(1, 0x00)], 0, 63, 0, 0, emit)])
+
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(_make_jpeg_decoder(), dec_schema)
-
-
-def _make_jpeg_color_decoder():
-    """Factory for mm_decode_jpeg_color's decode stage (closure =>
-    cloudpickle by-value). A GENERAL baseline JFIF reader extending the
-    grayscale decoder to multi-component interleaved scans: SOF0 with 1
-    or 3 components and per-component sampling factors (4:4:4, 4:2:0,
-    4:2:2 — any integer-ratio Hi/Vi grid), per-component quant/Huffman
-    table selection, per-component DC predictors through the MCU walk,
-    restart handling, nearest-replication chroma upsampling, and
-    libjpeg-style FIXED-POINT YCbCr->RGB:
-
-        R = Y + ((91881*Cr' + 32768) >> 16)
-        G = Y - ((22554*Cb' + 46802*Cr' + 32768) >> 16)
-        B = Y + ((116130*Cb' + 32768) >> 16)     (Cx' = Cx - 128)
-
-    The integer conversion is the cross-engine contract: every decoded
-    RGB byte is exact integer arithmetic from the dequantized planes,
-    so the SQL oracle replicates it bit-for-bit (a float 1.402-style
-    conversion would hand the driver hash a rounding-boundary lottery).
-    The checksum is position-weighted over the RGB-INTERLEAVED buffer,
-    so channel-order and upsampling-alignment defects go hash-red."""
-    import math
-    import struct
-
-    import numpy as np
-
-    zigzag = list(JPEG_ZIGZAG)
-    _A = np.array(
-        [
-            [
-                0.5 * (1 / math.sqrt(2) if u == 0 else 1.0)
-                * math.cos((2 * x + 1) * u * math.pi / 16)
-                for u in range(8)
-            ]
-            for x in range(8)
-        ]
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_jpeg, _PAYLOAD, source="text")
     )
-
-    # Accumulator BitReader + 16-bit LUT Huffman decoder, shared across
-    # the three JPEG decoders (r18, guide §4.2) — see _jpeg_entropy_tools
-    # for the bit-exactness argument. Instantiated INSIDE the factory so
-    # everything still pickles by value.
-    BitReader, build_decode, decode_huff, extend = _jpeg_entropy_tools()
-
-    unzig = np.argsort(np.array(zigzag))  # once, not per dense block
-
-    def decode_block(br, dct, act, q, pred):
-        # coeff buffer allocated LAZILY (r17): the DC-only block — the
-        # overwhelmingly common case in flat regions — never touches it
-        s = decode_huff(br, dct)
-        pred += extend(br.read_bits(s), s)
-        coeffs = None
-        k = 1
-        while k < 64:
-            rs = decode_huff(br, act)
-            r, size = rs >> 4, rs & 0x0F
-            if size == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break
-            k += r
-            if k > 63:
-                raise ValueError("AC run past 63")
-            if coeffs is None:
-                coeffs = np.zeros(64, dtype=np.int64)
-            coeffs[k] = extend(br.read_bits(size), size)
-            k += 1
-        if k == 1:
-            # DC-only: bit-identical 1-coefficient IDCT (see the
-            # grayscale decoder) — the overwhelmingly common block in
-            # flat image regions, and a ~10x decode win there. Returns
-            # the SCALAR (r17: numpy broadcasts it into the plane slice;
-            # the old per-block np.full was ~7% of decode wall).
-            a = float(_A[0, 0])
-            c = min(
-                255,
-                max(0, round((a * float(pred * q[0])) * a) + 128),
-            )
-            return int(c), pred
-        if coeffs is None:  # ZRL-advanced but no nonzero AC decoded
-            coeffs = np.zeros(64, dtype=np.int64)
-        coeffs[0] = pred
-        fq = (coeffs * q)[unzig].reshape(8, 8)
-        spatial = _A @ fq.astype(np.float64) @ _A.T
-        return np.clip(np.round(spatial) + 128, 0, 255).astype(np.int64), pred
-
-    def parse(payload):
-        if payload is None:
-            return None, None, None, None, None
-        bad = (None, None, None, False, None)
-        p = bytes(payload)
-        try:
-            if len(p) < 4 or p[:2] != b"\xff\xd8":
-                return bad
-            pos = 2
-            qtables, dc_tables, ac_tables = {}, {}, {}
-            w = h = None
-            comps = []  # (id, hfac, vfac, tq)
-            scan_map = {}
-            restart_interval = 0
-            while True:
-                if pos + 4 > len(p) or p[pos] != 0xFF:
-                    return bad
-                m = p[pos + 1]
-                if m == 0xD9:
-                    return bad
-                (seglen,) = struct.unpack_from(">H", p, pos + 2)
-                seg = p[pos + 4:pos + 2 + seglen]
-                if len(seg) != seglen - 2:
-                    return bad
-                if m == 0xDB:
-                    off = 0
-                    while off < len(seg):
-                        pq, tq = seg[off] >> 4, seg[off] & 0x0F
-                        off += 1
-                        if pq == 0:
-                            qtables[tq] = np.array(
-                                list(seg[off:off + 64]), dtype=np.int64
-                            )
-                            off += 64
-                        else:
-                            qtables[tq] = np.array(
-                                [
-                                    (seg[off + 2 * i] << 8)
-                                    | seg[off + 2 * i + 1]
-                                    for i in range(64)
-                                ],
-                                dtype=np.int64,
-                            )
-                            off += 128
-                elif m == 0xC4:
-                    off = 0
-                    while off < len(seg):
-                        tc, th = seg[off] >> 4, seg[off] & 0x0F
-                        bits = list(seg[off + 1:off + 17])
-                        nv = sum(bits)
-                        vals = list(seg[off + 17:off + 17 + nv])
-                        if len(vals) != nv:
-                            return bad
-                        (dc_tables if tc == 0 else ac_tables)[th] = (
-                            build_decode(bits, vals)
-                        )
-                        off += 17 + nv
-                elif m == 0xC0:
-                    if seg[0] != 8:
-                        return bad
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    ncomp = seg[5]
-                    if ncomp not in (1, 3):
-                        return bad
-                    comps = []
-                    for c in range(ncomp):
-                        cid = seg[6 + 3 * c]
-                        hv = seg[7 + 3 * c]
-                        comps.append(
-                            (cid, hv >> 4, hv & 0x0F, seg[8 + 3 * c])
-                        )
-                elif m in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                           0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    return bad
-                elif m == 0xDD:
-                    (restart_interval,) = struct.unpack_from(">H", seg, 0)
-                elif m == 0xDA:
-                    if w is None or seg[0] != len(comps):
-                        return bad
-                    for c in range(seg[0]):
-                        cid = seg[1 + 2 * c]
-                        tdta = seg[2 + 2 * c]
-                        scan_map[cid] = (tdta >> 4, tdta & 0x0F)
-                    pos = pos + 2 + seglen
-                    break
-                pos = pos + 2 + seglen
-
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if hmax < 1 or vmax < 1 or any(
-                c[1] < 1 or c[2] < 1 or hmax % c[1] or vmax % c[2]
-                for c in comps
-            ):
-                return bad  # non-integer upsampling ratio
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            planes = [
-                np.zeros((mcus_y * c[2] * 8, mcus_x * c[1] * 8),
-                         dtype=np.int64)
-                for c in comps
-            ]
-            for cid, _, _, tq in comps:
-                if (
-                    cid not in scan_map
-                    or scan_map[cid][0] not in dc_tables
-                    or scan_map[cid][1] not in ac_tables
-                    or tq not in qtables
-                ):
-                    return bad
-            br = BitReader(p, pos)
-            preds = [0] * len(comps)
-            mcu = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if (
-                        restart_interval
-                        and mcu
-                        and mcu % restart_interval == 0
-                    ):
-                        br.byte_align()
-                        mk = br.peek_marker()
-                        if mk is None or not (0xD0 <= mk <= 0xD7):
-                            return bad
-                        br.skip_marker()
-                        preds = [0] * len(comps)
-                    for ci, (cid, hf, vf, tq) in enumerate(comps):
-                        td, ta = scan_map[cid]
-                        for by in range(vf):
-                            for bx in range(hf):
-                                block, preds[ci] = decode_block(
-                                    br,
-                                    dc_tables[td],
-                                    ac_tables[ta],
-                                    qtables[tq],
-                                    preds[ci],
-                                )
-                                r0 = (my * vf + by) * 8
-                                c0 = (mx * hf + bx) * 8
-                                planes[ci][r0:r0 + 8, c0:c0 + 8] = block
-                    mcu += 1
-            br.sync()  # drop pad bits + rewind prefetch: exact pos
-            endpos = br.pos
-            consistent = (
-                endpos + 2 <= len(p)
-                and p[endpos:endpos + 2] == b"\xff\xd9"
-                and endpos + 2 == len(p)
-            )
-            # upsample each plane to full MCU-grid resolution, crop
-            full = []
-            for ci, (cid, hf, vf, tq) in enumerate(comps):
-                up = np.repeat(
-                    np.repeat(planes[ci], vmax // vf, axis=0),
-                    hmax // hf,
-                    axis=1,
-                )
-                full.append(up[:h, :w])
-            if len(comps) == 1:
-                R = G = B = full[0]
-            else:
-                Y, cb, cr = full[0], full[1] - 128, full[2] - 128
-                R = np.clip(Y + ((91881 * cr + 32768) >> 16), 0, 255)
-                G = np.clip(
-                    Y - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255
-                )
-                B = np.clip(Y + ((116130 * cb + 32768) >> 16), 0, 255)
-            rgb = np.stack([R, G, B], axis=-1).reshape(-1)
-            wsum = int(
-                ((np.arange(rgb.size, dtype=np.int64) + 1) * rgb).sum()
-                % 65536
-            )
-            return int(w), int(h), int(mcu), bool(consistent), wsum
-        except (struct.error, IndexError, ValueError):
-            return bad
-
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [parse(x) for x in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_mcus": pd.array([r[2] for r in rows], dtype="Int32"),
-                    "header_consistent": pd.array(
-                        [r[3] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[4] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return decode_batches
+    return staged.mapInPandas(*_make_jpeg_reader(**_JPEG_GRAY))
 
 
 def _jpegc_byte(idx: str) -> str:
@@ -2533,9 +2132,10 @@ def mm_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the real-world photo format shape (three components, interleaved
     MCUs of four Y blocks + one Cb + one Cr, per-component quant tables
     and DC predictors). The encoder emits genuine subsampled color
-    JPEGs; the decoder (_make_jpeg_color_decoder) is a general
-    multi-component baseline reader with nearest-replication
-    upsampling and libjpeg-style fixed-point YCbCr->RGB.
+    JPEGs; the decoder is the general JFIF reader (_make_jpeg_reader)
+    under the baseline-color contract: interleaved multi-component
+    MCUs, nearest-replication upsampling and libjpeg-style fixed-point
+    YCbCr->RGB.
 
     Exactness: Y is constant per 8x8 block (text byte at the Y-block's
     raster index), Cb/Cr constant per MCU (bytes at m+13 / 2m+7) — so
@@ -2550,124 +2150,42 @@ def mm_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: codec-family invariant — two Arrow-batched mapInPandas
     stages over one documents scan, no shuffle."""
-    import struct
+    write = _jfif_writer(
+        0xC0,
+        [(1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)],  # Y 2x2; Cb, Cr 1x1
+        2,  # quant tables: 0 luma, 1 chroma
+        (0, JPEG_AC_BITS, JPEG_AC_VALS),
+    )
 
-    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_codes = jpeg_canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
-    qtable_b = bytes(JPEG_QTABLE)
-    dc_bits_b, dc_vals_b = bytes(JPEG_DC_BITS), bytes(JPEG_DC_VALS)
-    ac_bits_b, ac_vals_b = bytes(JPEG_AC_BITS), bytes(JPEG_AC_VALS)
+    def to_jpeg(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        mw, mh = 1 + n % 3, 1 + (n // 5) % 2
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eob_code, eob_len = ac_codes[0x00]
+        def level(i: int) -> int:
+            return (tb[i % n] if n else 128) - 128
 
-        def to_jpeg(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            mw, mh = 1 + n % 3, 1 + (n // 5) % 2
-            w, h = 16 * mw, 16 * mh
-            bw = 2 * mw
-
-            def byte_at(i: int) -> int:
-                return tb[i % n] if n else 128
-
-            out = bytearray(b"\xff\xd8")
-            out += (
-                b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00"
-                + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-            )
-            # two quant tables in one DQT segment (0 luma, 1 chroma)
-            out += b"\xff\xdb" + struct.pack(">H", 2 + 2 * 65)
-            out += b"\x00" + qtable_b + b"\x01" + qtable_b
-            out += (
-                b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-                + struct.pack(">HH", h, w) + b"\x03"
-                + bytes([1, 0x22, 0])   # Y: 2x2, quant 0
-                + bytes([2, 0x11, 1])   # Cb: 1x1, quant 1
-                + bytes([3, 0x11, 1])   # Cr: 1x1, quant 1
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(dc_vals_b))
-                + b"\x00" + dc_bits_b + dc_vals_b
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(ac_vals_b))
-                + b"\x10" + ac_bits_b + ac_vals_b
-            )
-            out += (
-                b"\xff\xda" + struct.pack(">H", 12) + b"\x03"
-                + bytes([1, 0x00, 2, 0x00, 3, 0x00])
-                + bytes([0, 63, 0])
-            )
-            entropy = bytearray()
-            acc, nacc = 0, 0
-
-            def put(v: int, nb: int) -> None:
-                nonlocal acc, nacc
-                acc = (acc << nb) | (v & ((1 << nb) - 1))
-                nacc += nb
-                while nacc >= 8:
-                    byte = (acc >> (nacc - 8)) & 0xFF
-                    entropy.append(byte)
-                    if byte == 0xFF:
-                        entropy.append(0x00)
-                    nacc -= 8
-                    acc &= (1 << nacc) - 1
-
-            def put_dc(x: int, pred: int) -> int:
-                diff = x - pred
-                cat = abs(diff).bit_length()
-                ccode, clen = dc_codes[cat]
-                put(ccode, clen)
-                if cat:
-                    put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-                put(eob_code, eob_len)
-                return x
-
-            py = pcb = pcr = 0
+        def emit(put, dc, ac):
             for my in range(mh):
                 for mx in range(mw):
                     m = my * mw + mx
-                    for by in range(2):
-                        for bx in range(2):
-                            gi = (2 * my + by) * bw + (2 * mx + bx)
-                            py = put_dc(byte_at(gi) - 128, py)
-                    pcb = put_dc(byte_at(m + 13) - 128, pcb)
-                    pcr = put_dc(byte_at(2 * m + 7) - 128, pcr)
-            if nacc:
-                put((1 << (8 - nacc)) - 1, 8 - nacc)
-            out += entropy + b"\xff\xd9"
-            return bytes(out)
+                    units = [
+                        (0, (2 * my + by) * 2 * mw + 2 * mx + bx)
+                        for by in range(2)
+                        for bx in range(2)
+                    ] + [(1, m + 13), (2, 2 * m + 7)]  # 4 Y, Cb, Cr
+                    for i, t in units:
+                        dc(i, level(t))
+                        ac(0x00)  # EOB
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_jpeg(t) for t in pdf["text"]],
-                }
-            )
+        sel = [(1, 0x00), (2, 0x00), (3, 0x00)]
+        return write(16 * mw, 16 * mh, [(sel, 0, 63, 0, 0, emit)])
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_mcus", T.IntegerType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(_make_jpeg_color_decoder(), dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_jpeg, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_make_jpeg_reader(**_JPEG_COLOR))
 
 
 # ---------------------------------------------------------------------------
@@ -2689,74 +2207,58 @@ def _make_dhash_decoder():
     tile (see mm_image_dhash's oracle note)."""
     import struct
 
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        w32 = np.arange(32, dtype=np.int64)
+    w32 = np.arange(32, dtype=np.int64)
 
-        def dhash(payload) -> tuple:
-            if payload is None or len(payload) < 54 or payload[:2] != b"BM":
-                return None, None, None, None
-            _, _, _, off = struct.unpack_from("<IHHI", payload, 2)
-            _, w, h, _, bpp, comp, _ = struct.unpack_from(
-                "<IiiHHII", payload, 14
-            )
-            stride = (w * 3 + 3) // 4 * 4
-            if (
-                bpp != 24 or comp != 0 or w < 9 or h < 8
-                or len(payload) < off + stride * h
-            ):
-                return None, None, None, None
-            body = np.frombuffer(
-                payload, dtype=np.uint8, count=stride * h, offset=off
-            )
-            # bottom-up -> top-down, strip padding, sum RGB per pixel
-            luma3 = (
-                body.reshape(h, stride)[::-1, : w * 3]
-                .astype(np.int64)
-                .reshape(h, w, 3)
-                .sum(axis=2)
-            )
-            # 8x9 block means via a summed-area table (r17): one
-            # vectorized pass replaces 72 per-cell numpy .sum() calls
-            # (~40% of the fingerprint task's wall). Exact: int64
-            # prefix sums, nonnegative, so // floor-divides identically
-            # to the old int(block.sum()) // (block.size * 3).
-            P = np.zeros((h + 1, w + 1), dtype=np.int64)
-            P[1:, 1:] = luma3.cumsum(axis=0).cumsum(axis=1)
-            rb = (np.arange(9, dtype=np.int64) * h) // 8
-            cb = (np.arange(10, dtype=np.int64) * w) // 9
-            bs = (
-                P[np.ix_(rb[1:], cb[1:])]
-                - P[np.ix_(rb[:-1], cb[1:])]
-                - P[np.ix_(rb[1:], cb[:-1])]
-                + P[np.ix_(rb[:-1], cb[:-1])]
-            )
-            sizes = (
-                (rb[1:] - rb[:-1])[:, None] * (cb[1:] - cb[:-1])[None, :] * 3
-            )
-            g = bs // sizes
-            bits = (g[:, :8] < g[:, 1:]).astype(np.int64).ravel()
-            h_lo = int((bits[:32] << w32).sum())
-            h_hi = int((bits[32:] << w32).sum())
-            return w, h, h_lo, h_hi
+    def dhash(payload) -> tuple:
+        if len(payload) < 54 or payload[:2] != b"BM":
+            return None, None, None, None
+        _, _, _, off = struct.unpack_from("<IHHI", payload, 2)
+        _, w, h, _, bpp, comp, _ = struct.unpack_from(
+            "<IiiHHII", payload, 14
+        )
+        stride = (w * 3 + 3) // 4 * 4
+        if (
+            bpp != 24 or comp != 0 or w < 9 or h < 8
+            or len(payload) < off + stride * h
+        ):
+            return None, None, None, None
+        body = np.frombuffer(
+            payload, dtype=np.uint8, count=stride * h, offset=off
+        )
+        # bottom-up -> top-down, strip padding, sum RGB per pixel
+        luma3 = (
+            body.reshape(h, stride)[::-1, : w * 3]
+            .astype(np.int64)
+            .reshape(h, w, 3)
+            .sum(axis=2)
+        )
+        # 8x9 block means via a summed-area table (r17): one vectorized
+        # pass replaces 72 per-cell numpy .sum() calls (~40% of the
+        # fingerprint task's wall). Exact: int64 prefix sums,
+        # nonnegative, so // floor-divides identically to the old
+        # int(block.sum()) // (block.size * 3).
+        P = np.zeros((h + 1, w + 1), dtype=np.int64)
+        P[1:, 1:] = luma3.cumsum(axis=0).cumsum(axis=1)
+        rb = (np.arange(9, dtype=np.int64) * h) // 8
+        cb = (np.arange(10, dtype=np.int64) * w) // 9
+        bs = (
+            P[np.ix_(rb[1:], cb[1:])]
+            - P[np.ix_(rb[:-1], cb[1:])]
+            - P[np.ix_(rb[1:], cb[:-1])]
+            + P[np.ix_(rb[:-1], cb[:-1])]
+        )
+        sizes = (rb[1:] - rb[:-1])[:, None] * (cb[1:] - cb[:-1])[None, :] * 3
+        g = bs // sizes
+        bits = (g[:, :8] < g[:, 1:]).astype(np.int64).ravel()
+        h_lo = int((bits[:32] << w32).sum())
+        h_hi = int((bits[32:] << w32).sum())
+        return w, h, h_lo, h_hi
 
-        for pdf in batches:
-            rows = [dhash(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "h_lo": pd.array([r[2] for r in rows], dtype="Int64"),
-                    "h_hi": pd.array([r[3] for r in rows], dtype="Int64"),
-                }
-            )
-
-    return decode_batches
+    return _row_kernel(dhash, [
+        ("width", _INT), ("height", _INT), ("h_lo", _LONG), ("h_hi", _LONG),
+    ])
 
 
 def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2780,6 +2282,8 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import struct
 
+    import numpy as np
+
     from databricks_feature_store_poc_spark.cacheutil import (
         session_get,
         session_persist,
@@ -2790,65 +2294,36 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is not None:
         return cached
 
-    def encode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import pandas as pd
+    def to_bmp(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        s = 4 + n % 5
+        w, h = 9 * s, 8 * s
+        grid = np.array(
+            [
+                [tb[(r * 9 + c) % n] if n else 128 for c in range(9)]
+                for r in range(8)
+            ],
+            dtype=np.uint8,
+        )
+        img = np.repeat(np.repeat(grid, s, axis=0), s, axis=1)
+        stride = (w * 3 + 3) // 4 * 4
+        body = np.zeros((h, stride), dtype=np.uint8)
+        body[:, : w * 3] = np.repeat(img[:, :, None], 3, axis=2).reshape(
+            h, w * 3
+        )
+        img_size = stride * h
+        hdr = b"BM" + struct.pack("<IHHI", 54 + img_size, 0, 0, 54)
+        dib = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
+        )
+        return hdr + dib + body[::-1].tobytes()
 
-        def to_bmp(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            s = 4 + n % 5
-            w, h = 9 * s, 8 * s
-            grid = np.array(
-                [
-                    [tb[(r * 9 + c) % n] if n else 128 for c in range(9)]
-                    for r in range(8)
-                ],
-                dtype=np.uint8,
-            )
-            img = np.repeat(np.repeat(grid, s, axis=0), s, axis=1)
-            stride = (w * 3 + 3) // 4 * 4
-            body = np.zeros((h, stride), dtype=np.uint8)
-            body[:, : w * 3] = np.repeat(img[:, :, None], 3, axis=2).reshape(
-                h, w * 3
-            )
-            img_size = stride * h
-            hdr = b"BM" + struct.pack("<IHHI", 54 + img_size, 0, 0, 54)
-            dib = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-            )
-            return hdr + dib + body[::-1].tobytes()
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_bmp(t) for t in pdf["text"]],
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("h_lo", T.LongType()),
-            T.StructField("h_hi", T.LongType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    fps = staged.mapInPandas(_make_dhash_decoder(), dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_bmp, _PAYLOAD, source="text")
+    )
+    fps = staged.mapInPandas(*_make_dhash_decoder())
     return session_persist(spark, "image_dhash_fingerprints", sources, fps)
 
 
@@ -3040,317 +2515,6 @@ def dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Eighth codec: PROGRESSIVE JPEG (SOF2) — VERDICT r16 #6
 # ---------------------------------------------------------------------------
 
-def _make_jpeg_progressive_decoder():
-    """Factory for mm_decode_jpeg_progressive's decode stage (closure =>
-    cloudpickle by-value, the codec-family convention). A GENERAL
-    progressive-grayscale JFIF reader implementing T.81 Annex G decode:
-
-    - multi-scan loop to EOI over a persistent per-block COEFFICIENT
-      accumulator (progressive's defining structure: no scan renders
-      pixels; they successively deposit coefficient bits);
-    - DC first scans (Ss=Se=0, Ah=0): Huffman-coded diffs of the
-      point-transformed DC, deposited at << Al;
-    - DC refinement scans (Ah>0): one raw bit per block OR'd in at Al;
-    - AC first scans (spectral band Ss..Se, Ah=0): run-length zeros,
-      ZRL, EXTEND-signed coefficients at << Al, and EOBRUN — the
-      end-of-band RUN across blocks (EOBn symbol + n extra bits) that
-      baseline JPEG does not have;
-    - AC refinement scans (Ah>0): the G.1.2.3 correction-bit walk —
-      newly-nonzero coefficients arrive as +-(1<<Al) sign bits,
-      every nonzero-history coefficient consumes a correction bit
-      (including inside EOBRUN tails), ZRL skips 16 zero-history lanes;
-    - restart markers reset predictor, EOBRUN, and bit alignment;
-    - final reconstruction: dequantize + inverse zigzag + separable
-      float IDCT per block, with the 1-coefficient DC fast path
-      (bit-identical, see mm_decode_jpeg).
-
-    Baseline (SOF0) or other SOFs return the diagnostic row — the
-    registered contract here is progressive grayscale; truncated or
-    forged structures return the diagnostic row, never a crash."""
-    import math
-    import struct
-
-    import numpy as np
-
-    zigzag = list(JPEG_ZIGZAG)
-
-    _A = np.array(
-        [
-            [
-                0.5 * (1 / math.sqrt(2) if u == 0 else 1.0)
-                * math.cos((2 * x + 1) * u * math.pi / 16)
-                for u in range(8)
-            ]
-            for x in range(8)
-        ]
-    )
-
-    # Accumulator BitReader + 16-bit LUT Huffman decoder, shared across
-    # the three JPEG decoders (r18, guide §4.2) — see _jpeg_entropy_tools
-    # for the bit-exactness argument. Instantiated INSIDE the factory so
-    # everything still pickles by value.
-    BitReader, build_decode, decode_huff, extend = _jpeg_entropy_tools()
-
-    def parse(payload):
-        if payload is None:
-            return None, None, None, None, None, None
-        bad = (None, None, None, None, False, None)
-        p = bytes(payload)
-        try:
-            if len(p) < 4 or p[:2] != b"\xff\xd8":
-                return bad
-            pos = 2
-            qtables = {}
-            dc_tables = {}
-            ac_tables = {}
-            w = h = None
-            qsel = None
-            restart_interval = 0
-            coeffs = None
-            bw = bh = 0
-            n_scans = 0
-            consistent = True
-            saw_eoi = False
-            while True:
-                if pos + 2 > len(p):
-                    return bad
-                if p[pos] != 0xFF:
-                    return bad
-                m = p[pos + 1]
-                if m == 0xD9:  # EOI
-                    saw_eoi = True
-                    pos += 2
-                    break
-                if pos + 4 > len(p):
-                    return bad
-                (seglen,) = struct.unpack_from(">H", p, pos + 2)
-                seg = p[pos + 4:pos + 2 + seglen]
-                if len(seg) != seglen - 2:
-                    return bad
-                if m == 0xDB:  # DQT
-                    off = 0
-                    while off < len(seg):
-                        pq, tq = seg[off] >> 4, seg[off] & 0x0F
-                        off += 1
-                        if pq == 0:
-                            if off + 64 > len(seg):
-                                return bad
-                            qtables[tq] = list(seg[off:off + 64])
-                            off += 64
-                        else:
-                            if off + 128 > len(seg):
-                                return bad
-                            qtables[tq] = [
-                                (seg[off + 2 * i] << 8) | seg[off + 2 * i + 1]
-                                for i in range(64)
-                            ]
-                            off += 128
-                elif m == 0xC4:  # DHT
-                    off = 0
-                    while off < len(seg):
-                        tc, th = seg[off] >> 4, seg[off] & 0x0F
-                        bits = list(seg[off + 1:off + 17])
-                        nv = sum(bits)
-                        vals = list(seg[off + 17:off + 17 + nv])
-                        if len(vals) != nv:
-                            return bad
-                        t = build_decode(bits, vals)
-                        if tc == 0:
-                            dc_tables[th] = t
-                        else:
-                            ac_tables[th] = t
-                        off += 17 + nv
-                elif m == 0xC2:  # SOF2 progressive
-                    if seg[0] != 8 or seg[5] != 1 or seg[7] != 0x11:
-                        return bad  # grayscale contract
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    qsel = seg[8]
-                    bw, bh = (w + 7) // 8, (h + 7) // 8
-                    coeffs = np.zeros((bh * bw, 64), dtype=np.int64)
-                elif m in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                           0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    return bad  # not progressive
-                elif m == 0xDD:  # DRI
-                    (restart_interval,) = struct.unpack_from(">H", seg, 0)
-                elif m == 0xDA:  # SOS: one progressive scan
-                    if coeffs is None or seg[0] != 1:
-                        return bad
-                    td, ta = seg[2] >> 4, seg[2] & 0x0F
-                    ss, se = seg[3], seg[4]
-                    ah, al = seg[5] >> 4, seg[5] & 0x0F
-                    if not (0 <= ss <= se <= 63):
-                        return bad
-                    if (ss == 0) != (se == 0):
-                        return bad  # DC scans are exactly Ss=Se=0
-                    br = BitReader(p, pos + 2 + seglen)
-                    n_blocks = bw * bh
-                    eobrun = 0
-                    pred = 0
-                    mcu = 0
-                    p1 = 1 << al
-                    m1 = -1 << al
-                    for bi in range(n_blocks):
-                        if (
-                            restart_interval
-                            and mcu
-                            and mcu % restart_interval == 0
-                        ):
-                            br.byte_align()
-                            mk = br.peek_marker()
-                            if mk is None or not (0xD0 <= mk <= 0xD7):
-                                return bad
-                            br.skip_marker()
-                            pred = 0
-                            eobrun = 0
-                        c = coeffs[bi]
-                        if ss == 0:  # DC scan
-                            if ah == 0:
-                                s = decode_huff(br, dc_tables[td])
-                                pred += extend(br.read_bits(s), s)
-                                c[0] = pred << al
-                            else:  # DC refinement: one raw bit
-                                if br.read_bit():
-                                    c[0] |= p1
-                        elif ah == 0:  # AC first scan
-                            if eobrun > 0:
-                                eobrun -= 1
-                            else:
-                                k = ss
-                                while k <= se:
-                                    rs = decode_huff(br, ac_tables[ta])
-                                    r, s = rs >> 4, rs & 0x0F
-                                    if s == 0:
-                                        if r != 15:  # EOBn
-                                            eobrun = (1 << r) - 1
-                                            if r:
-                                                eobrun += br.read_bits(r)
-                                            break
-                                        k += 16  # ZRL
-                                        continue
-                                    k += r
-                                    if k > se:
-                                        return bad
-                                    # coefficients live in SCAN order
-                                    # (like the DQT); natural order is
-                                    # restored once, at reconstruction
-                                    c[k] = extend(br.read_bits(s), s) << al
-                                    k += 1
-                        else:  # AC refinement scan (G.1.2.3)
-                            k = ss
-                            if eobrun == 0:
-                                while k <= se:
-                                    rs = decode_huff(br, ac_tables[ta])
-                                    r, s = rs >> 4, rs & 0x0F
-                                    if s == 0:
-                                        if r != 15:  # EOBn: current
-                                            # block's tail handled below
-                                            eobrun = 1 << r
-                                            if r:
-                                                eobrun += br.read_bits(r)
-                                            break
-                                        # ZRL: skip 16 zero-history
-                                        # lanes, correcting nonzeros
-                                    elif s == 1:
-                                        newval = (
-                                            p1 if br.read_bit() else m1
-                                        )
-                                    else:
-                                        return bad  # refine s must be 1
-                                    while k <= se:
-                                        if c[k] != 0:
-                                            if br.read_bit() and not (
-                                                c[k] & p1
-                                            ):
-                                                c[k] += (
-                                                    p1 if c[k] > 0 else m1
-                                                )
-                                        else:
-                                            if r == 0:
-                                                if s:
-                                                    c[k] = newval
-                                                k += 1
-                                                break
-                                            r -= 1
-                                        k += 1
-                            if eobrun > 0:
-                                while k <= se:
-                                    if c[k] != 0:
-                                        if br.read_bit() and not (
-                                            c[k] & p1
-                                        ):
-                                            c[k] += p1 if c[k] > 0 else m1
-                                    k += 1
-                                eobrun -= 1
-                        mcu += 1
-                    n_scans += 1
-                    # scan's pad bits: discard (sync also rewinds any
-                    # prefetched bytes); next marker at br.pos
-                    br.sync()
-                    pos = br.pos
-                    continue
-                pos = pos + 2 + seglen
-            if coeffs is None or n_scans == 0 or qsel not in qtables:
-                return bad
-            consistent = bool(saw_eoi and pos == len(p))
-            q = np.array(qtables[qsel], dtype=np.int64)
-            inv = np.argsort(np.array(zigzag))
-            img = np.zeros((bh * 8, bw * 8), dtype=np.int64)
-            a00 = float(_A[0, 0])
-            for bi in range(bw * bh):
-                by, bx = divmod(bi, bw)
-                c = coeffs[bi]
-                if not c[1:].any():
-                    # DC-only fast path (bit-identical — mm_decode_jpeg)
-                    v = min(
-                        255,
-                        max(0, round((a00 * float(c[0] * q[0])) * a00) + 128),
-                    )
-                    img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = int(v)
-                    continue
-                fq = (c * q)[inv].reshape(8, 8)
-                spatial = _A @ fq.astype(np.float64) @ _A.T
-                img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = np.clip(
-                    np.round(spatial) + 128, 0, 255
-                )
-            cropped = img[:h, :w].reshape(-1)
-            wsum = int(
-                ((np.arange(cropped.size, dtype=np.int64) + 1) * cropped)
-                .sum()
-                % 65536
-            )
-            return (
-                int(w), int(h), int(bw * bh), int(n_scans),
-                bool(consistent), wsum,
-            )
-        except (struct.error, IndexError, ValueError):
-            return bad
-
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [parse(x) for x in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "height": pd.array([r[1] for r in rows], dtype="Int32"),
-                    "n_blocks": pd.array([r[2] for r in rows], dtype="Int32"),
-                    "n_scans": pd.array([r[3] for r in rows], dtype="Int32"),
-                    "header_consistent": pd.array(
-                        [r[4] for r in rows], dtype="boolean"
-                    ),
-                    "pixel_checksum_weighted": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return decode_batches
-
-
 @query(
     "mm_decode_jpeg_progressive",
     oracle="""
@@ -3413,9 +2577,10 @@ def mm_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
       5. AC refine 32-63 Ss=32 Se=63 Ah=1 Al=0
       6. DC refine       Ss=0  Se=0  Ah=1 Al=0  (one raw bit/block)
 
-    and stage 2 DECODES it with the general Annex-G reader above
-    (_make_jpeg_progressive_decoder) — coefficient accumulator, EOBRUN,
-    successive-approximation deposits, refinement correction bits.
+    and stage 2 DECODES it with the general JFIF reader
+    (_make_jpeg_reader) under the progressive contract — coefficient
+    accumulator, EOBRUN, successive-approximation deposits, refinement
+    correction bits.
 
     Oracle strategy (shared with mm_decode_jpeg): each 8x8 block is one
     constant gray level from the text bytes, so DC = v-128 exactly and
@@ -3432,146 +2597,50 @@ def mm_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the codec-family invariant — two Arrow-batched
     mapInPandas stages over one documents scan, no shuffle anywhere."""
-    import struct
-
-    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
     # progressive AC table: only EOBn symbols (n = 0..3 covers runs of
     # 1..15 blocks; the corpus has <= 12) — baseline's Annex-K AC table
-    # has no EOBn, they are progressive-only symbols
-    # three 2-bit codes + one 3-bit (T.81 C.2 reserves the all-1s code
-    # word as a prefix, so a saturated 2-bit level would be non-conformant)
-    ac_bits = (0, 3, 1) + (0,) * 13
-    ac_vals = (0x00, 0x10, 0x20, 0x30)
-    ac_codes = jpeg_canonical_codes(ac_bits, ac_vals)
-    qtable_b = bytes(JPEG_QTABLE)
-    dc_bits_b, dc_vals_b = bytes(JPEG_DC_BITS), bytes(JPEG_DC_VALS)
-    ac_bits_b, ac_vals_b = bytes(ac_bits), bytes(ac_vals)
+    # has no EOBn, they are progressive-only symbols. Three 2-bit codes
+    # + one 3-bit (T.81 C.2 reserves the all-1s code word as a prefix,
+    # so a saturated 2-bit level would be non-conformant).
+    ac_table = (1, (0, 3, 1) + (0,) * 13, (0x00, 0x10, 0x20, 0x30))
+    write = _jfif_writer(0xC2, [(1, 0x11, 0)], 1, ac_table)
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def scan_entropy(put_fn_bits) -> bytes:
-            """Run a bit-emitting callback, return the 1-padded,
-            FF00-stuffed entropy segment."""
-            entropy = bytearray()
-            state = {"acc": 0, "n": 0}
+    def to_pjpeg(text) -> bytes:
+        tb = text.encode("utf-8")
+        n = len(tb)
+        bw, bh = 1 + (n // 3) % 4, 1 + (n // 11) % 3
+        nb = bw * bh
+        dcs = [(tb[i % n] if n else 128) - 128 for i in range(nb)]
+        r = nb.bit_length() - 1
 
-            def put(v: int, nb: int) -> None:
-                state["acc"] = (state["acc"] << nb) | (v & ((1 << nb) - 1))
-                state["n"] += nb
-                while state["n"] >= 8:
-                    byte = (state["acc"] >> (state["n"] - 8)) & 0xFF
-                    entropy.append(byte)
-                    if byte == 0xFF:
-                        entropy.append(0x00)
-                    state["n"] -= 8
-                    state["acc"] &= (1 << state["n"]) - 1
+        def dc_first(put, dc, ac):
+            for v in dcs:
+                dc(0, v >> 1)  # point transform (floor shift)
 
-            put_fn_bits(put)
-            if state["n"]:
-                put((1 << (8 - state["n"])) - 1, 8 - state["n"])
-            return bytes(entropy)
-
-        def sos(td_ta: int, ss: int, se: int, ah: int, al: int) -> bytes:
-            return (
-                b"\xff\xda" + struct.pack(">H", 8) + b"\x01"
-                + bytes([1, td_ta]) + bytes([ss, se, (ah << 4) | al])
-            )
-
-        def eob_run(put, n_blocks: int) -> None:
-            r = n_blocks.bit_length() - 1
-            code, clen = ac_codes[r << 4]
-            put(code, clen)
+        def eob_run(put, dc, ac):  # an all-zero band: ONE EOBRUN of nb
+            ac(r << 4)
             if r:
-                put(n_blocks - (1 << r), r)
+                put(nb - (1 << r), r)
 
-        def to_pjpeg(text) -> bytes | None:
-            if text is None:
-                return None
-            tb = text.encode("utf-8")
-            n = len(tb)
-            bw, bh = 1 + (n // 3) % 4, 1 + (n // 11) % 3
-            w, h = 8 * bw, 8 * bh
-            nb = bw * bh
-            dcs = [
-                (tb[i % n] if n else 128) - 128 for i in range(nb)
-            ]
-            out = bytearray(b"\xff\xd8")
-            out += (
-                b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00"
-                + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-            )
-            out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + qtable_b
-            out += (
-                b"\xff\xc2" + struct.pack(">H", 11) + b"\x08"
-                + struct.pack(">HH", h, w) + b"\x01" + bytes([1, 0x11, 0])
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(dc_vals_b))
-                + b"\x00" + dc_bits_b + dc_vals_b
-            )
-            out += (
-                b"\xff\xc4" + struct.pack(">H", 19 + len(ac_vals_b))
-                + b"\x11" + ac_bits_b + ac_vals_b
-            )
+        def dc_refine(put, dc, ac):
+            for v in dcs:
+                put(v & 1, 1)
 
-            def dc_first(put):
-                pred = 0
-                for dc in dcs:
-                    v = dc >> 1  # point transform (floor shift)
-                    diff = v - pred
-                    pred = v
-                    cat = abs(diff).bit_length()
-                    ccode, clen = dc_codes[cat]
-                    put(ccode, clen)
-                    if cat:
-                        put(
-                            diff if diff >= 0 else diff + (1 << cat) - 1,
-                            cat,
-                        )
+        dc_sel, ac_sel = [(1, 0x00)], [(1, 0x01)]
+        return write(8 * bw, 8 * bh, [
+            (dc_sel, 0, 0, 0, 1, dc_first),
+            (ac_sel, 1, 31, 0, 1, eob_run),
+            (ac_sel, 32, 63, 0, 1, eob_run),
+            (ac_sel, 1, 31, 1, 0, eob_run),
+            (ac_sel, 32, 63, 1, 0, eob_run),
+            (dc_sel, 0, 0, 1, 0, dc_refine),
+        ])
 
-            def ac_all_zero(put):
-                eob_run(put, nb)
-
-            def dc_refine(put):
-                for dc in dcs:
-                    put(dc & 1, 1)
-
-            out += sos(0x00, 0, 0, 0, 1) + scan_entropy(dc_first)
-            out += sos(0x01, 1, 31, 0, 1) + scan_entropy(ac_all_zero)
-            out += sos(0x01, 32, 63, 0, 1) + scan_entropy(ac_all_zero)
-            out += sos(0x01, 1, 31, 1, 0) + scan_entropy(ac_all_zero)
-            out += sos(0x01, 32, 63, 1, 0) + scan_entropy(ac_all_zero)
-            out += sos(0x00, 0, 0, 1, 0) + scan_entropy(dc_refine)
-            out += b"\xff\xd9"
-            return bytes(out)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [to_pjpeg(t) for t in pdf["text"]],
-                }
-            )
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    dec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_blocks", T.IntegerType()),
-            T.StructField("n_scans", T.IntegerType()),
-            T.StructField("header_consistent", T.BooleanType()),
-            T.StructField("pixel_checksum_weighted", T.IntegerType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    return staged.mapInPandas(_make_jpeg_progressive_decoder(), dec_schema)
+    staged = d.select("doc_id", "text").mapInPandas(
+        *_row_kernel(to_pjpeg, _PAYLOAD, source="text")
+    )
+    return staged.mapInPandas(*_make_jpeg_reader(**_JPEG_PROGRESSIVE))
 
 
 _DHASH_TOPK = 5

@@ -118,8 +118,9 @@ def _decode_foreign(payload: bytes) -> tuple:
         _make_png_decoder,
     )
 
+    kernel, _ = _make_png_decoder()
     batches = iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
-    out = next(_make_png_decoder()(batches))
+    out = next(kernel(batches))
     r = out.iloc[0]
 
     def v(x):
@@ -180,7 +181,15 @@ def test_png_corruption_detected():
     assert got3[4] in (False, None)
 
 
-@pytest.mark.parametrize("name", ["mm_decode_png"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "mm_decode_png",
+        "mm_decode_jpeg",
+        "mm_decode_jpeg_color",
+        "mm_decode_jpeg_progressive",
+    ],
+)
 def test_oracle_match_r15_png(name, spark):
     r = compare(name, spark, SF_TEST, verbose=False)
     assert r["ok"], f"{name}: {r.get('issues')}"
@@ -553,7 +562,8 @@ def _decode_gif_foreign(payload: bytes) -> tuple:
         _make_gif_decoder,
     )
 
-    out = next(_make_gif_decoder()(
+    kernel, _ = _make_gif_decoder()
+    out = next(kernel(
         iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
     ))
     r = out.iloc[0]

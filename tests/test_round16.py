@@ -309,6 +309,31 @@ def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0):
     return bytes(out)
 
 
+def _overflowing_dc_jpeg() -> bytes:
+    """8x8 baseline gray JFIF whose one DC difference is 2**64 - 1: a
+    forged DC table codes category 64 as '0', then 64 one-bits, then
+    the Annex K EOB '1010', 1-padded and FF00-stuffed."""
+    import struct
+
+    from databricks_feature_store_poc_spark.llm.multimodal import (
+        JPEG_AC_BITS,
+        JPEG_AC_VALS,
+        JPEG_QTABLE,
+    )
+
+    return (
+        b"\xff\xd8"
+        + b"\xff\xdb\x00\x43\x00" + bytes(JPEG_QTABLE)
+        + b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"
+        + b"\xff\xc4\x00\x14\x00" + bytes([1] + [0] * 15) + b"\x40"
+        + b"\xff\xc4" + struct.pack(">H", 19 + len(JPEG_AC_VALS))
+        + b"\x10" + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
+        + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"
+        + b"\x7f" + b"\xff\x00" * 7 + b"\xd7"
+        + b"\xff\xd9"
+    )
+
+
 def _jpeg_reference_pixels(coeff_blocks, bw, bh, qtable):
     """Independent IDCT reference (test-side numpy, separate from the
     kernel's implementation path)."""
@@ -343,11 +368,13 @@ def _jpeg_reference_pixels(coeff_blocks, bw, bh, qtable):
 
 def _decode_jpeg_foreign(payload):
     from databricks_feature_store_poc_spark.llm.multimodal import (
-        _make_jpeg_decoder,
+        _JPEG_GRAY,
+        _make_jpeg_reader,
     )
 
+    kernel, _ = _make_jpeg_reader(**_JPEG_GRAY)
     batches = iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
-    out = next(_make_jpeg_decoder()(batches))
+    out = next(kernel(batches))
     r = out.iloc[0]
 
     def v(x):
@@ -415,6 +442,13 @@ def test_jpeg_corruption_detected():
     forged[dqt + 2:dqt + 4] = (60000).to_bytes(2, "big")
     got4 = _decode_jpeg_foreign(bytes(forged))
     assert got4[3] in (False, None)
+    diagnostic = (None, None, None, False, None)
+    # a scan naming a component the frame does not declare
+    stray = bytearray(good)
+    stray[stray.index(b"\xff\xda") + 5] = 2
+    assert _decode_jpeg_foreign(bytes(stray)) == diagnostic
+    # a DC difference past 64 bits (once clamped to a 255 block)
+    assert _decode_jpeg_foreign(_overflowing_dc_jpeg()) == diagnostic
 
 
 # --- mm_decode_jpeg_color: foreign multi-component payloads -----------------
@@ -572,11 +606,13 @@ def _jpeg_color_reference(comps, mcus_x, mcus_y):
 
 def _decode_jpeg_color_foreign(payload):
     from databricks_feature_store_poc_spark.llm.multimodal import (
-        _make_jpeg_color_decoder,
+        _JPEG_COLOR,
+        _make_jpeg_reader,
     )
 
+    kernel, _ = _make_jpeg_reader(**_JPEG_COLOR)
     batches = iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
-    out = next(_make_jpeg_color_decoder()(batches))
+    out = next(kernel(batches))
     r = out.iloc[0]
 
     def v(x):
@@ -632,6 +668,8 @@ def test_jpeg_color_decoder_foreign(sampling, dri):
 
 
 def test_jpeg_color_corruption_detected():
+    from databricks_feature_store_poc_spark.llm.multimodal import JPEG_QTABLE
+
     comps = [
         {"id": 1, "h": 2, "v": 2, "tq": 0,
          "blocks": [[10] + [0] * 63] * 4},
@@ -647,6 +685,23 @@ def test_jpeg_color_corruption_detected():
     bad4[sof + 9] = 4
     got2 = _decode_jpeg_color_foreign(bytes(bad4))
     assert got2[3] in (False, None)
+    # a DQT holding only 10 of its 64 entries: every contract's reader
+    # must refuse it (the color path once decoded it header-consistent)
+    one, _, _ = _ref_jpeg_color(
+        [{"id": 1, "h": 1, "v": 1, "tq": 0,
+          "blocks": [[10] + [0] * 63] * 4}], 2, 2
+    )
+    dqt = one.index(b"\xff\xdb")
+    seglen = int.from_bytes(one[dqt + 2:dqt + 4], "big")
+    short = (
+        one[:dqt] + b"\xff\xdb\x00\x0d\x00" + bytes(JPEG_QTABLE[:10])
+        + one[dqt + 2 + seglen:]
+    )
+    diagnostic = (None, None, None, False, None)
+    assert _decode_jpeg_color_foreign(short) == diagnostic
+    assert _decode_jpeg_foreign(short) == diagnostic
+    # a DC difference past 64 bits (once clamped, or an OverflowError)
+    assert _decode_jpeg_color_foreign(_overflowing_dc_jpeg()) == diagnostic
 
 
 # --- dedup_minhash_clusters ---------------------------------------------------

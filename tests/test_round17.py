@@ -70,7 +70,8 @@ def test_dhash_kernel_foreign_payloads_roundtrip():
     pdf = pd.DataFrame(
         {"doc_id": list(range(len(payloads))), "payload": payloads}
     )
-    out = pd.concat(list(_make_dhash_decoder()(iter([pdf]))))
+    kernel, _ = _make_dhash_decoder()
+    out = pd.concat(list(kernel(iter([pdf]))))
     for i, px in enumerate(cases):
         exp_lo, exp_hi = _ref_dhash(px.astype(np.int64))
         row = out[out["doc_id"] == i].iloc[0]
@@ -386,11 +387,13 @@ def _ref_pjpeg(coeff_blocks, bw, bh, qtable, dri=0):
 
 def _decode_pjpeg_foreign(payload):
     from databricks_feature_store_poc_spark.llm.multimodal import (
-        _make_jpeg_progressive_decoder,
+        _JPEG_PROGRESSIVE,
+        _make_jpeg_reader,
     )
 
+    kernel, _ = _make_jpeg_reader(**_JPEG_PROGRESSIVE)
     pdf = pd.DataFrame({"doc_id": [0], "payload": [payload]})
-    out = next(_make_jpeg_progressive_decoder()(iter([pdf])))
+    out = next(kernel(iter([pdf])))
     r = out.iloc[0]
 
     def v(x):
@@ -453,6 +456,16 @@ def test_progressive_jpeg_corruption_and_contract():
     base[sof + 1] = 0xC0
     assert _decode_pjpeg_foreign(bytes(base))[4] in (False, None)
     assert _decode_pjpeg_foreign(None)[4] is None
+    diagnostic = (None,) * 4 + (False, None)
+    # a scan naming a component the frame does not declare
+    stray = bytearray(good)
+    stray[stray.index(b"\xff\xda") + 5] = 2
+    assert _decode_pjpeg_foreign(bytes(stray)) == diagnostic
+    # a scan selecting an undefined Huffman table (once a KeyError)
+    no_table = bytearray(good)
+    second_sos = good.index(b"\xff\xda", good.index(b"\xff\xda") + 1)
+    no_table[second_sos + 6] = 0x33
+    assert _decode_pjpeg_foreign(bytes(no_table)) == diagnostic
 
 
 # --- sim_image_hamming_topk: deterministic cut --------------------------------
@@ -520,3 +533,150 @@ def test_progressive_jpeg_restart_markers():
     )
     got = _decode_pjpeg_foreign(payload)
     assert got == (8 * bw, 8 * bh, bw * bh, 4, True, want), got
+
+
+# --- codec kernels: cloudpickle BY VALUE (executors never import the repo) --
+
+
+_UNPICKLE_AND_RUN = """
+import pickle
+import sys
+
+try:
+    import databricks_feature_store_poc_spark  # noqa: F401
+except ImportError:
+    pass
+else:
+    sys.exit("the package is importable here; the check would prove nothing")
+with open(sys.argv[1], "rb") as f:
+    cases = pickle.load(f)
+out = {
+    name: next(pickle.loads(blob)(iter([pdf])))
+    for name, (blob, pdf) in cases.items()
+}
+with open(sys.argv[2], "wb") as f:
+    pickle.dump(out, f)
+"""
+
+
+def test_codec_kernels_pickle_by_value(tmp_path):
+    """Executors run with a PYTHONPATH that lacks this repo, so every
+    codec kernel must cloudpickle BY VALUE — a module-level helper
+    reached by reference would fail only on a real cluster, because
+    tests run with the repo on sys.path. Ship each kernel to a fresh
+    interpreter that cannot import the package, run it on a one-row
+    batch there, and compare with the in-process result."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from databricks_feature_store_poc_spark.llm import multimodal as mm
+    from tests.test_round15 import _ref_gif, _ref_png
+    from tests.test_round16 import _ref_jpeg
+
+    # a helper-built encode kernel around the JFIF writer
+    write = mm._jfif_writer(
+        0xC0, [(1, 0x11, 0)], 1, (0, mm.JPEG_AC_BITS, mm.JPEG_AC_VALS)
+    )
+
+    def to_jpeg(payload):
+        def emit(put, dc, ac):
+            dc(0, len(payload))
+            ac(0x00)
+
+        return write(8, 8, [([(1, 0x00)], 0, 63, 0, 0, emit)])
+
+    pixels = bytes(range(60))
+    cases = {
+        "jpeg": (
+            mm._make_jpeg_reader(**mm._JPEG_GRAY),
+            _ref_jpeg([[10] + [0] * 63, [-5, 3] + [0] * 62], 2, 1,
+                      mm.JPEG_QTABLE),
+        ),
+        "png": (mm._make_png_decoder(), _ref_png(pixels, 5, 4)),
+        "gif": (mm._make_gif_decoder(), _ref_gif(pixels, 10, 6)),
+        "dhash": (
+            mm._make_dhash_decoder(),
+            _gray_bmp(np.arange(90, dtype=np.uint8).reshape(9, 10)),
+        ),
+        "writer": (mm._row_kernel(to_jpeg, mm._PAYLOAD), b"abc"),
+    }
+    shipped, want = {}, {}
+    for name, ((kernel, _), payload) in cases.items():
+        pdf = pd.DataFrame({"doc_id": [7], "payload": [payload]})
+        shipped[name] = (cloudpickle.dumps(kernel), pdf)
+        want[name] = next(kernel(iter([pdf])))
+    src, dst = tmp_path / "cases.pkl", tmp_path / "out.pkl"
+    src.write_bytes(pickle.dumps(shipped))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", _UNPICKLE_AND_RUN, str(src), str(dst)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    got = pickle.loads(dst.read_bytes())
+    for name in cases:
+        pd.testing.assert_frame_equal(got[name], want[name])
+    assert want["jpeg"]["header_consistent"].iloc[0]  # a real decode ran
+    assert want["writer"]["payload"].iloc[0].endswith(b"\xff\xd9")
+
+
+# --- the one JFIF reader follows the scan header (T.81 A.2) ---------------
+
+
+def _patched(payload: bytes, marker: bytes, offset: int, value: int) -> bytes:
+    """Set the byte `offset` bytes after the first `marker`."""
+    b = bytearray(payload)
+    b[b.index(marker) + offset] = value
+    return bytes(b)
+
+
+def test_jpeg_reader_sampling_and_scan_order():
+    """Two T.81 rules the separate decoders did not follow:
+
+    - a scan of ONE component is non-interleaved, over ceil(w/8) x
+      ceil(h/8) blocks whatever the component's sampling factors, so a
+      lone component sampled 2x2 decodes exactly like its 1x1 twin
+      (was: the diagnostic row, or for color a decode in 2x2-block MCU
+      order when the data lasted);
+    - an interleaved MCU holds the components in SCAN-header order
+      (was: frame-header order, swapping chroma when the two differ)."""
+    import random
+
+    from tests.test_round16 import (
+        _decode_jpeg_color_foreign,
+        _decode_jpeg_foreign,
+        _rand_blocks,
+        _ref_jpeg,
+        _ref_jpeg_color,
+    )
+
+    q = [8] + [16] * 63
+    blocks = [[v] + [0] * 63 for v in (10, -5, 40)]
+    gray = _ref_jpeg(blocks, 3, 1, q)
+    prog = _ref_pjpeg(blocks, 3, 1, q)
+    for decode, payload, sof in (
+        (_decode_jpeg_foreign, gray, b"\xff\xc0"),
+        (_decode_jpeg_color_foreign, gray, b"\xff\xc0"),
+        (_decode_pjpeg_foreign, prog, b"\xff\xc2"),
+    ):
+        want = decode(payload)
+        assert want[-2] is True  # header_consistent
+        assert decode(_patched(payload, sof, 11, 0x22)) == want
+
+    rng = random.Random(6)
+    y, cb, cr = (
+        {"id": i, "h": 1, "v": 1, "tq": int(i > 1),
+         "blocks": _rand_blocks(rng, 1)}
+        for i in (1, 2, 3)
+    )
+    want = _decode_jpeg_color_foreign(_ref_jpeg_color([y, cb, cr], 1, 1)[0])
+    # coded Y, Cr, Cb with the scan header saying so; frame header 1, 2, 3
+    scan_order = bytearray(_ref_jpeg_color([y, cr, cb], 1, 1)[0])
+    sof = scan_order.index(b"\xff\xc0")
+    scan_order[sof + 10:sof + 19] = bytes([1, 0x11, 0, 2, 0x11, 1,
+                                           3, 0x11, 1])
+    assert want[3] is True
+    assert _decode_jpeg_color_foreign(bytes(scan_order)) == want
