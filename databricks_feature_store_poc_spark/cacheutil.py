@@ -1,26 +1,35 @@
-"""Session-lifetime persisted-DataFrame memo (generalization of the ANN
-index cache in llm/similarity.py, ADVICE-r5-hardened semantics).
+"""The engine's one session memo, and the checkpoint ledger.
 
-Iterative operators (PageRank's edge list, k-means' quantized vectors)
-reference the same derived DataFrame several times in one plan; without
-persistence Spark re-derives it per reference. ``session_persist``
-caches ONE persisted copy per (application, kind, source fingerprint):
+Every plan, schema and derived table the engine reuses within a session
+goes through :func:`memo`, under one rule:
 
-- the source-file fingerprint (mtime_ns + size) invalidates the entry
-  if the underlying parquet is regenerated in place;
-- entries from stopped applications or stale fingerprints are
-  unpersisted/evicted on the next touch, so the memo can't grow beyond
-  one live entry per (kind, source) per process.
+- the key is ``(application id, kind)`` and the entry is
+  ``(source_fingerprint(paths), value)``;
+- a hit needs the same fingerprint (mtime_ns + size of every source
+  file), so a source regenerated in place is never answered from the old
+  entry; a miss calls ``build()`` once and replaces the entry;
+- plan memos put the source path in ``kind`` (one plan per path);
+  persisted memos use a bare kind (one persisted table per kind), which
+  bounds the storage memory the memo can pin;
+- the memo unpersists only what it persisted: ``DataFrame.unpersist``
+  uncaches by plan match, so dropping a plain ``load_table`` plan could
+  drop someone else's cache;
+- a miss drops the entries of dead applications (one SparkContext per
+  process, so every other application id is dead);
+- one lock guards the dict and ``build()`` runs outside it.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+_MEMO: dict[tuple[str, str], tuple[str, Any, bool]] = {}
+_MEMO_LOCK = threading.Lock()
 
 
 def app_id(spark: SparkSession) -> str:
@@ -124,28 +133,44 @@ def release_checkpoints(spark: SparkSession) -> int:
     return n
 
 
-def session_get(
-    spark: SparkSession, kind: str, source_paths: list[str]
-) -> DataFrame | None:
-    """Peek the memo WITHOUT building anything: lets callers whose
-    DataFrame construction is itself expensive (collect-driven fits)
-    skip the construction when a live entry already exists. Returns
-    None on miss or stale fingerprint (the next session_persist call
-    evicts stale entries)."""
-    key = (app_id(spark), kind, source_fingerprint(source_paths))
-    return _CACHE.get(key)
+def _frames(value: Any) -> list[DataFrame]:
+    """The DataFrames a memo value holds: itself, or its tuple members."""
+    parts = value if isinstance(value, tuple) else (value,)
+    return [v for v in parts if isinstance(v, DataFrame)]
 
 
-def session_persist(
-    spark: SparkSession, kind: str, source_paths: list[str], df: DataFrame
-) -> DataFrame:
+def memo(
+    spark: SparkSession,
+    kind: str,
+    paths: list[str],
+    build: Callable[[], Any],
+    persist: bool = False,
+) -> Any:
+    """Session-memoised ``build()`` under the module's one rule. With
+    ``persist`` the DataFrames of the value are persisted on a miss and
+    unpersisted when the entry is replaced."""
     app = app_id(spark)
-    key = (app, kind, source_fingerprint(source_paths))
-    for k in [k for k in _CACHE if k != key and (k[0] != app or k[:2] == key[:2])]:
-        try:
-            _CACHE.pop(k).unpersist()
-        except Exception:
-            pass  # owning context already gone — the cache died with it
-    if key not in _CACHE:
-        _CACHE[key] = df.persist()
-    return _CACHE[key]
+    key = (app, kind)
+    fp = source_fingerprint(paths)
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    with _MEMO_LOCK:
+        old = _MEMO.get(key)
+        if old is not None and old[0] == fp:
+            return old[1]  # another thread built the same entry first
+        _MEMO[key] = (fp, value, persist)
+        for k in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[k]  # dead application: its storage died with it
+    # Unpersist before persisting: a source rewritten in place gives the
+    # new plan the same shape as the old one, and persist() of a plan
+    # that is already cached keeps the stale cache.
+    if old is not None and old[2]:
+        for df in _frames(old[1]):
+            df.unpersist()
+    if persist:
+        for df in _frames(value):
+            df.persist()
+    return value

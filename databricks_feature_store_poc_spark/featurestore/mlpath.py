@@ -1072,7 +1072,6 @@ def rfm_segments(
     """
     if ntile_max_rows is None:
         ntile_max_rows = RFM_NTILE_MAX
-    cust = _rfm_customer_frame(spark, sf_dir)
     if ntile_max_rows > 0:
         n_dim = parquet_row_count(sf_dir, "customer")
         if n_dim is None:
@@ -1080,7 +1079,7 @@ def rfm_segments(
     else:
         n_dim = 1  # forced histogram branch: skip the probe entirely
     if 0 < n_dim <= ntile_max_rows:
-        scored = cust.select(
+        scored = _rfm_customer_frame(spark, sf_dir).select(
             "o_custkey", "monetary_cents",
             F.ntile(5).over(
                 Window.orderBy(F.desc("recency_days"), F.asc("o_custkey"))
@@ -1093,14 +1092,14 @@ def rfm_segments(
             ).cast("long").alias("m_score"),
         )
     else:
-        from databricks_feature_store_poc_spark.cacheutil import session_persist
+        from databricks_feature_store_poc_spark.cacheutil import memo
 
         # The three cut scans + the scoring pass reference cust 4x;
         # persist ONE copy for the session (fingerprint-keyed, evicted
         # on testdata regeneration) instead of re-aggregating orders.
-        cust = session_persist(
-            spark, "rfm_cust",
-            [os.path.join(sf_dir, "orders.parquet")], cust,
+        cust = memo(
+            spark, "rfm_cust", [os.path.join(sf_dir, "orders.parquet")],
+            lambda: _rfm_customer_frame(spark, sf_dir), persist=True,
         )
         r_cuts = _disc_cut_frame(
             cust.select((-F.col("recency_days")).alias("v")), "v", "r"

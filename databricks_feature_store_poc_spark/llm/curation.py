@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from databricks_feature_store_poc_spark.llm.dedup import shingle_expr
+from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.cacheutil import (
     tracked_local_checkpoint as _ckpt,
 )
@@ -45,18 +46,14 @@ def _decon_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split + shingle fan-out."""
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        return d.select("doc_id", F.expr(_WORDS).alias("words")).select(
+            "doc_id", F.explode(F.expr(shingle_expr(DECON_NGRAM))).alias("shingle")
+        )
 
-    d = load_table(spark, sf_dir, "documents")
-    ex = d.select("doc_id", F.expr(_WORDS).alias("words")).select(
-        "doc_id", F.explode(F.expr(shingle_expr(DECON_NGRAM))).alias("shingle")
-    )
-    return session_persist(
-        spark,
-        "decon_shingles",
-        [_os.path.join(sf_dir, "documents.parquet")],
-        ex,
-    )
+    src = [_os.path.join(sf_dir, "documents.parquet")]
+    return memo(spark, "decon_shingles", src, build, persist=True)
 
 
 _WORDS = r"filter(split(text, '\\s+'), x -> x != '')"

@@ -28,11 +28,13 @@ with the LSH route above it (llm/similarity.py).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from databricks_feature_store_poc_spark.cacheutil import app_id as _app_id
+from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.cacheutil import (
     tracked_local_checkpoint as _ckpt,
 )
@@ -95,69 +97,42 @@ _DUCK_SHINGLES = rf"""
 """
 
 
-# Session-scoped memo for the inverted index: five dedup queries build
-# the identical (tokenize -> shingle -> DF-cap) pipeline over the same
-# corpus; reusing one persisted index across them is the same reuse-a-
-# partitioning principle as sharing a shuffle across window frames.
-# Keyed by Spark application id so a new session never sees another
-# session's (invalid) cached plan.
-_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-# A long-lived session touching many sf_dirs would otherwise accumulate
-# persisted indexes in executor storage memory forever; two live entries
-# cover the dev loop (one sf for tests + one for bench) and anything older
-# is unpersisted on insert.
-_INDEX_CACHE_MAX = 2
-
-
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) inverted index with stop-shingles removed.
 
     One explode + one group-filter; no driver materialization. The DF cap
     is computed with a window over the exploded index (count distinct docs
-    per shingle) — a single shuffle on shingle. Memoized per
-    (session, sf_dir): deterministic content, so reuse is invisible to
-    callers except in wall time.
+    per shingle) — a single shuffle on shingle. Five dedup queries build
+    this identical pipeline over the same corpus, so it is one persisted
+    ``cacheutil.memo`` entry per session, valid while the corpus file's
+    fingerprint holds: reuse is invisible to callers except in wall time.
     """
-    cache_key = (_app_id(spark), sf_dir)
-    cached = _INDEX_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    d = load_table(spark, sf_dir, "documents")
-    # Materialize the words array once per row; building shingles off the
-    # raw split expression would re-tokenize the text per index inside the
-    # transform lambda (O(n^2) per document).
-    with_words = d.select("doc_id", F.expr(_WORDS).alias("words"))
-    ex = with_words.select(
-        "doc_id", F.explode(F.expr(shingle_expr(SHINGLE_WORDS))).alias("shingle")
-    )
-    # (doc_id, shingle) is distinct after array_distinct, so document
-    # frequency is a plain COUNT(*) window over shingle — ONE shuffle,
-    # where the agg+self-join formulation costs two.
-    from pyspark.sql.window import Window
 
-    idx = (
-        ex.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
-        .filter(F.col("df") <= DF_CAP)
-        .select("doc_id", "shingle")
-    )
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # Materialize the words array once per row; building shingles off the
+        # raw split expression would re-tokenize the text per index inside the
+        # transform lambda (O(n^2) per document).
+        with_words = d.select("doc_id", F.expr(_WORDS).alias("words"))
+        ex = with_words.select(
+            "doc_id", F.explode(F.expr(shingle_expr(SHINGLE_WORDS))).alias("shingle")
+        )
+        # (doc_id, shingle) is distinct after array_distinct, so document
+        # frequency is a plain COUNT(*) window over shingle — ONE shuffle,
+        # where the agg+self-join formulation costs two.
+        from pyspark.sql.window import Window
+
+        return (
+            ex.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+            .filter(F.col("df") <= DF_CAP)
+            .select("doc_id", "shingle")
+        )
+
     # The callers fan the index into several DAG branches (signatures,
     # pair join both sides, size lookup) — persist so the tokenize +
     # df-cap shuffle runs once, not per branch.
-    idx = idx.persist()
-    _INDEX_CACHE[cache_key] = idx
-    # Evict superseded entries (oldest-first; dicts preserve insertion
-    # order). Entries from dead sessions just get dropped — unpersist on a
-    # stopped SparkContext raises, and their storage died with the JVM.
-    app_id = _app_id(spark)
-    while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
-        old_key, old_df = next(iter(_INDEX_CACHE.items()))
-        del _INDEX_CACHE[old_key]
-        if old_key[0] == app_id:
-            try:
-                old_df.unpersist(blocking=False)
-            except Exception:
-                pass
-    return idx
+    src = [os.path.join(sf_dir, "documents.parquet")]
+    return memo(spark, "shingle_index", src, build, persist=True)
 
 
 def _jaccard_for_pairs(idx: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -466,67 +441,59 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Session-persisted per corpus: dedup_simhash and its audit twin both
     consume the identical fingerprint table.
     """
-    import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
-    )
-
-    sources = [_os.path.join(sf_dir, "documents.parquet")]
-    cached = session_get(spark, "simhash_fingerprints", sources)
-    if cached is not None:
-        return cached
-
-    d = load_table(spark, sf_dir, "documents")
-    # 64-bit word hash = first 16 hex chars of md5(word), assembled from
-    # two 32-bit conv() halves (conv of 16 chars would overflow the
-    # signed-long parse). md5 replaces xxhash64 (r15, VERDICT r14 #6) so
-    # the fingerprints — and therefore dedup_simhash's FULL output —
-    # reproduce bit-identically in the DuckDB oracle.
-    tokens = d.select(
-        "doc_id",
-        F.explode(
-            F.expr("array_distinct(filter(split(text, '\\\\s+'), x -> x != ''))")
-        ).alias("word"),
-    ).withColumn(
-        "h",
-        F.shiftleft(
-            F.conv(F.substring(F.md5("word"), 9, 8), 16, 10).cast("long"), 32
-        ).bitwiseOR(
-            F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
-        ),
-    )
-    hashes = tokens.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
-
-    @F.pandas_udf("struct<lo: long, hi: long>")
-    def fingerprint(hs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(hs) == 0:
-            return pd.DataFrame({"lo": [], "hi": []})
-        # collect_list groups are never empty, so offsets are strictly
-        # increasing and reduceat segments are well-formed.
-        counts = np.array([len(x) for x in hs], dtype=np.int64)
-        allh = np.concatenate([np.asarray(x, dtype=np.int64) for x in hs]).view(np.uint64)
-        bits = ((allh[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & 1).astype(
-            np.int32
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # 64-bit word hash = first 16 hex chars of md5(word), assembled from
+        # two 32-bit conv() halves (conv of 16 chars would overflow the
+        # signed-long parse). md5 replaces xxhash64 (r15, VERDICT r14 #6) so
+        # the fingerprints — and therefore dedup_simhash's FULL output —
+        # reproduce bit-identically in the DuckDB oracle.
+        tokens = d.select(
+            "doc_id",
+            F.explode(
+                F.expr("array_distinct(filter(split(text, '\\\\s+'), x -> x != ''))")
+            ).alias("word"),
+        ).withColumn(
+            "h",
+            F.shiftleft(
+                F.conv(F.substring(F.md5("word"), 9, 8), 16, 10).cast("long"), 32
+            ).bitwiseOR(
+                F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
+            ),
         )
-        offsets = np.zeros(len(counts), dtype=np.int64)
-        np.cumsum(counts[:-1], out=offsets[1:])
-        set_counts = np.add.reduceat(bits, offsets, axis=0)
-        # sign-sum lane b is 2*set_b - n; fingerprint bit b set iff > 0
-        sign_pos = (2 * set_counts) > counts[:, None]
-        weights = 1 << np.arange(64, dtype=np.uint64)
-        packed = sign_pos.astype(np.uint64) * weights[None, :]
-        lo = packed[:, :32].sum(axis=1).astype(np.int64)
-        hi = (packed[:, 32:].sum(axis=1) >> np.uint64(32)).astype(np.int64)
-        return pd.DataFrame({"lo": lo, "hi": hi})
+        hashes = tokens.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
 
-    docs = hashes.select("doc_id", fingerprint("hs").alias("f")).select(
-        "doc_id", F.col("f.lo").alias("h_lo"), F.col("f.hi").alias("h_hi")
-    )
-    return session_persist(spark, "simhash_fingerprints", sources, docs)
+        @F.pandas_udf("struct<lo: long, hi: long>")
+        def fingerprint(hs: pd.Series) -> pd.DataFrame:
+            import numpy as np
+
+            if len(hs) == 0:
+                return pd.DataFrame({"lo": [], "hi": []})
+            # collect_list groups are never empty, so offsets are strictly
+            # increasing and reduceat segments are well-formed.
+            counts = np.array([len(x) for x in hs], dtype=np.int64)
+            allh = np.concatenate([np.asarray(x, dtype=np.int64) for x in hs]).view(np.uint64)
+            bits = ((allh[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & 1).astype(
+                np.int32
+            )
+            offsets = np.zeros(len(counts), dtype=np.int64)
+            np.cumsum(counts[:-1], out=offsets[1:])
+            set_counts = np.add.reduceat(bits, offsets, axis=0)
+            # sign-sum lane b is 2*set_b - n; fingerprint bit b set iff > 0
+            sign_pos = (2 * set_counts) > counts[:, None]
+            weights = 1 << np.arange(64, dtype=np.uint64)
+            packed = sign_pos.astype(np.uint64) * weights[None, :]
+            lo = packed[:, :32].sum(axis=1).astype(np.int64)
+            hi = (packed[:, 32:].sum(axis=1) >> np.uint64(32)).astype(np.int64)
+            return pd.DataFrame({"lo": lo, "hi": hi})
+
+        return hashes.select("doc_id", fingerprint("hs").alias("f")).select(
+            "doc_id", F.col("f.lo").alias("h_lo"), F.col("f.hi").alias("h_hi")
+        )
+
+    src = [os.path.join(sf_dir, "documents.parquet")]
+    return memo(spark, "simhash_fingerprints", src, build, persist=True)
 
 
 def _sim_word_half_duck(pos: int) -> str:

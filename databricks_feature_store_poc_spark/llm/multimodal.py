@@ -1260,6 +1260,9 @@ JPEG_AC_VALS = (
 # exactly 8*(v-128), so coded DC == v-128 and the roundtrip is
 # bit-exact); AC steps 16 (standard-ish; engine blocks have zero AC).
 JPEG_QTABLE = (8,) + (16,) * 63
+# Huffman decode LUTs one JFIF reader keeps: the engine's writers use
+# three distinct tables in all (Annex K DC and AC, progressive EOBn AC).
+JPEG_HUFF_LUT_CAP = 8
 
 
 def jpeg_canonical_codes(bits, vals):
@@ -1320,7 +1323,10 @@ def _jpeg_entropy_tools():
         """65536-entry Huffman LUT: entry[w] = (code_length << 8) | symbol
         for the shortest code that is a prefix of the 16-bit window w;
         0 where no code matches. Memoized per table bytes (tables repeat
-        across a corpus; rebuilding was ~5% of decode wall pre-r17)."""
+        across a corpus; rebuilding was ~5% of decode wall pre-r17), at
+        most JPEG_HUFF_LUT_CAP tables, oldest dropped first: each LUT
+        holds ~2.5 MB, and foreign JPEGs with per-image optimised tables
+        would otherwise grow the memo by ~10 MB per image."""
         key = (bytes(bits), bytes(vals))
         hit = _huff_memo.get(key)
         if hit is not None:
@@ -1349,6 +1355,8 @@ def _jpeg_entropy_tools():
                     (length << 8) | vals[valptr + i]
                 )
         table = lut.tolist()  # plain-list indexing beats np scalar get
+        if len(_huff_memo) >= JPEG_HUFF_LUT_CAP:
+            del _huff_memo[next(iter(_huff_memo))]
         _huff_memo[key] = table
         return table
 
@@ -2284,15 +2292,7 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
-    )
-
-    sources = [_os.path.join(sf_dir, "documents.parquet")]
-    cached = session_get(spark, "image_dhash_fingerprints", sources)
-    if cached is not None:
-        return cached
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
     def to_bmp(text) -> bytes:
         tb = text.encode("utf-8")
@@ -2319,12 +2319,16 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return hdr + dib + body[::-1].tobytes()
 
-    d = load_table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text").mapInPandas(
-        *_row_kernel(to_bmp, _PAYLOAD, source="text")
-    )
-    fps = staged.mapInPandas(*_make_dhash_decoder())
-    return session_persist(spark, "image_dhash_fingerprints", sources, fps)
+    def build() -> DataFrame:
+        staged = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .mapInPandas(*_row_kernel(to_bmp, _PAYLOAD, source="text"))
+        )
+        return staged.mapInPandas(*_make_dhash_decoder())
+
+    src = [_os.path.join(sf_dir, "documents.parquet")]
+    return memo(spark, "image_dhash_fingerprints", src, build, persist=True)
 
 
 def _dhash_bit(i: str) -> str:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.cacheutil import (
     tracked_local_checkpoint as _ckpt,
 )
@@ -878,19 +879,14 @@ def text_surprisal_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     handles the zipf-head skew — hot words are exactly the
     skew-join-splittable case); one final groupBy(doc_id). No driver
     state, no vocabulary cap."""
-    d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.expr(_WORDS)).alias("word")
-    )
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
     import os as _os
 
-    words = session_persist(
-        spark,
-        "surprisal_words",
-        [_os.path.join(sf_dir, "documents.parquet")],
-        words,
-    )
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        return d.select("doc_id", F.explode(F.expr(_WORDS)).alias("word"))
+
+    src = [_os.path.join(sf_dir, "documents.parquet")]
+    words = memo(spark, "surprisal_words", src, build, persist=True)
     vocab = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -1164,45 +1160,41 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization. BIGINT holds c_xy*N to ~2^63 (a 10^12-bigram
     corpus with a 10^9-count head pair needs DECIMAL(38,0) — noted,
     not hit at any gated SF)."""
-    d = load_table(spark, sf_dir, "documents")
-    # Materialize the words array ONCE per row before the per-index
-    # lambda touches it (the SCALE.md text-operator rule): referencing
-    # _WORDS inside element_at would re-run split(text) per element —
-    # O(len^2) per document, the 100x-gate timeout on first contact.
-    pairs = (
-        d.where(F.col("text").isNotNull())
-        .select(F.expr(_WORDS).alias("ws"))
-        .select(
-            F.explode(
-                F.expr(
-                    # greatest(.., 0): a 0-word doc would make the slice
-                    # length -1, which slice() rejects (adversarial
-                    # whitespace-only documents)
-                    "transform(slice(ws, 1, greatest(size(ws) - 1, 0)), "
-                    "(x, i) -> struct(x as w1, "
-                    "element_at(ws, i + 2) as w2))"
-                )
-            ).alias("p")
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # Materialize the words array ONCE per row before the per-index
+        # lambda touches it (the SCALE.md text-operator rule): referencing
+        # _WORDS inside element_at would re-run split(text) per element —
+        # O(len^2) per document, the 100x-gate timeout on first contact.
+        pairs = (
+            d.where(F.col("text").isNotNull())
+            .select(F.expr(_WORDS).alias("ws"))
+            .select(
+                F.explode(
+                    F.expr(
+                        # greatest(.., 0): a 0-word doc would make the slice
+                        # length -1, which slice() rejects (adversarial
+                        # whitespace-only documents)
+                        "transform(slice(ws, 1, greatest(size(ws) - 1, 0)), "
+                        "(x, i) -> struct(x as w1, "
+                        "element_at(ws, i + 2) as w2))"
+                    )
+                ).alias("p")
+            )
+            .select("p.w1", "p.w2")
         )
-        .select("p.w1", "p.w2")
-    )
-    big = pairs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("c_xy")
-    )
+        return pairs.groupBy("w1", "w2").agg(
+            F.count(F.lit(1)).cast("long").alias("c_xy")
+        )
+
     # session-persist the grouped relation (vocab^2-bounded, tiny next
     # to the corpus): its four consumers below then share ONE corpus
     # scan by construction — not merely by AQE exchange reuse, which
     # only dedupes at runtime and leaves the static plan 4-scan.
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
-
-    big = session_persist(
-        spark,
-        "bigram_counts",
-        [_os.path.join(sf_dir, "documents.parquet")],
-        big,
-    )
+    src = [_os.path.join(sf_dir, "documents.parquet")]
+    big = memo(spark, "bigram_counts", src, build, persist=True)
     # margins + total derived from the GROUPED relation (vocab^2-bounded),
     # not by re-scanning pairs three more times: sum(c_xy) by w1 is the
     # pair count by w1. One corpus-sized pass total.

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.cacheutil import (
     tracked_local_checkpoint as _ckpt,
 )
@@ -241,51 +242,44 @@ def kmeans_fit_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collect-driven fit (ADVICE r6)."""
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
-    )
+    def fit() -> DataFrame:
+        # NULL embeddings are not clusterable points: excluded here and in
+        # the oracle's v CTE (the adversarial replica carries NULL vectors).
+        # vec_id is the POINT IDENTITY: conflicting duplicate ids (r12 dup
+        # replica — same vec_id, different payload) resolve to the
+        # lexicographically-least quantized code on both engines, so "the
+        # point with id X" stays well-defined for init, assignment, and the
+        # n_dup_vectors accounting downstream.
+        from pyspark.sql.window import Window as _W
 
-    sources = [_os.path.join(sf_dir, "embeddings.parquet")]
-    cached = session_get(spark, "kmeans_assignment", sources)
-    if cached is not None:
-        return cached
-
-    # NULL embeddings are not clusterable points: excluded here and in
-    # the oracle's v CTE (the adversarial replica carries NULL vectors).
-    # vec_id is the POINT IDENTITY: conflicting duplicate ids (r12 dup
-    # replica — same vec_id, different payload) resolve to the
-    # lexicographically-least quantized code on both engines, so "the
-    # point with id X" stays well-defined for init, assignment, and the
-    # n_dup_vectors accounting downstream.
-    from pyspark.sql.window import Window as _W
-
-    base = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.expr(_QV).alias("qv"))
-        .withColumn(
-            "__dup_rn",
-            F.row_number().over(_W.partitionBy("vec_id").orderBy("qv")),
+        base = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", F.expr(_QV).alias("qv"))
+            .withColumn(
+                "__dup_rn",
+                F.row_number().over(_W.partitionBy("vec_id").orderBy("qv")),
+            )
+            .filter(F.col("__dup_rn") == 1)
+            .drop("__dup_rn")
         )
-        .filter(F.col("__dup_rn") == 1)
-        .drop("__dup_rn")
-    )
-    init_rows = base.orderBy("vec_id").limit(K).collect()
-    if not init_rows:
-        # degenerate corpus (r11): no clusterable points — an empty
-        # assignment with the full schema; kmeans_assign's centroid
-        # literal array would otherwise be untyped (analysis error)
-        empty = base.withColumn("cid", F.lit(0).cast("int")).withColumn(
-            "dist", F.lit(0).cast("bigint")
-        ).limit(0)
-        return session_persist(spark, "kmeans_assignment", sources, empty)
-    centroids = {i + 1: [int(x) for x in r["qv"]] for i, r in enumerate(init_rows)}
-    assigned = kmeans_assign(base, centroids)
-    for _ in range(KM_ITERS - 1):
-        centroids = kmeans_update(assigned)
+        init_rows = base.orderBy("vec_id").limit(K).collect()
+        if not init_rows:
+            # degenerate corpus (r11): no clusterable points — an empty
+            # assignment with the full schema; kmeans_assign's centroid
+            # literal array would otherwise be untyped (analysis error)
+            return base.withColumn("cid", F.lit(0).cast("int")).withColumn(
+                "dist", F.lit(0).cast("bigint")
+            ).limit(0)
+        centroids = {i + 1: [int(x) for x in r["qv"]] for i, r in enumerate(init_rows)}
         assigned = kmeans_assign(base, centroids)
-    return session_persist(spark, "kmeans_assignment", sources, assigned)
+        for _ in range(KM_ITERS - 1):
+            centroids = kmeans_update(assigned)
+            assigned = kmeans_assign(base, centroids)
+        return assigned
+
+    src = [_os.path.join(sf_dir, "embeddings.parquet")]
+    return memo(spark, "kmeans_assignment", src, fit, persist=True)
 
 
 # --- SemDeDup: cluster-then-pair semantic dedup ----------------------------
@@ -719,13 +713,10 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast shift factors — constant cost at any N."""
     import os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
-
-    cells = session_persist(
-        spark,
-        "pca_gram_cells",
-        [os.path.join(sf_dir, "embeddings.parquet")],
-        embed_gram_matrix(spark, sf_dir),
+    src = [os.path.join(sf_dir, "embeddings.parquet")]
+    cells = memo(
+        spark, "pca_gram_cells", src, lambda: embed_gram_matrix(spark, sf_dir),
+        persist=True,
     )
     up = cells.select(
         F.col("dim_i").alias("i"), F.col("dim_j").alias("j"), "s"

@@ -39,11 +39,6 @@ def _staging_root() -> str:
     return os.environ.get("SPARK_GRAFT_STAGING_DIR", tempfile.gettempdir())
 
 
-# scan_binary_files listing memo: (applicationId, staged dir) ->
-# (staging fingerprint, loaded binaryFile DataFrame). Plan-only.
-_BINFILES_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def _run_scoped_path(spark: SparkSession, name: str, sf_dir: str) -> str:
     """Per-(application, scale-factor) output path: concurrent runs at
     different SFs (or concurrent sessions) never race on an overwrite,
@@ -261,9 +256,8 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin): a dir staged under an older rule is stale even when the
     # source parquet is unchanged — same lesson as the replica recipe
     # fingerprints (ADVICE r11 #2).
-    fp = cacheutil.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")]
-    ) + "|stage=v2"
+    src = [os.path.join(sf_dir, "documents.parquet")]
+    fp = cacheutil.source_fingerprint(src) + "|stage=v2"
     out = os.path.join(
         _staging_root(),
         "spark_graft_binfiles_"
@@ -297,16 +291,13 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # glob load re-lists ~N/10 staged files on the DRIVER every call
     # (~1.2 s at sf0.1) for a file set that is immutable under the
     # staging fingerprint. Memoize the loaded DataFrame — an unexecuted
-    # plan; every action still reads the files — keyed like the staging
-    # itself; manifest-backed table formats exist at scale for exactly
+    # plan; every action still reads the files — keyed on the staging
+    # source; manifest-backed table formats exist at scale for exactly
     # this listing cost.
-    memo_key = (_app_id(spark), out)
-    hit = _BINFILES_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        files = hit[1]
-    else:
-        files = spark.read.format("binaryFile").load(os.path.join(out, "*.txt"))
-        _BINFILES_MEMO[memo_key] = (fp, files)
+    files = cacheutil.memo(
+        spark, f"binfiles:{out}", src,
+        lambda: spark.read.format("binaryFile").load(os.path.join(out, "*.txt")),
+    )
     return files.select(
         F.regexp_extract(F.col("path"), r"([0-9]+)\.txt$", 1)
         .cast("bigint")

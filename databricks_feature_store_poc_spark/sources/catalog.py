@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from databricks_feature_store_poc_spark.cacheutil import memo
+
 TABLES = (
     "region",
     "nation",
@@ -35,68 +37,29 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session-scoped ANALYZED-PLAN memo (r17 optimization, guide §6 "file
-# listing"): every ``load_table`` call used to run a fresh
-# ``spark.read.parquet`` — a py4j round-trip plus a driver-side
-# FileIndex build and parquet footer/schema read costing ~150 ms per
-# call on the bench rig — and the suite makes ~500 such calls per bench
-# pass (TPC-H queries alone call it 4-7x each). A real deployment reads
-# through a catalog table whose schema/file metadata is resolved once
-# per session; this memo gives the same semantics: key =
-# (applicationId, absolute path, source fingerprint). NOTHING is
-# persisted or precomputed — the value is an unexecuted logical plan,
-# so every action still scans the parquet files in full; the
-# fingerprint (mtime+size of every part file) invalidates the entry if
-# the table is regenerated in place, exactly like
-# ``cacheutil.source_fingerprint``.
-_PLAN_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _table_fingerprint(path: str) -> str:
-    from databricks_feature_store_poc_spark.cacheutil import source_fingerprint
-
-    return source_fingerprint([path])
-
-
-def _app_id(spark: SparkSession) -> str:
-    """Cached applicationId — see cacheutil.app_id (r18)."""
-    from databricks_feature_store_poc_spark.cacheutil import app_id
-
-    return app_id(spark)
-
-
-_CONFS_ASSERTED: set[str] = set()
-
-
 def ensure_parquet_read_confs(spark: SparkSession) -> None:
     """Assert the two parquet read confs the testdata needs, ONCE per
     session (nothing in the engine ever resets them, and conf.set is a
     py4j round-trip that used to run per load_table call / per streaming
     run). Hit and miss paths of the plan memo both route through here,
     so session conf state is identical either way (ADVICE r17 #1)."""
-    app = _app_id(spark)
-    if app in _CONFS_ASSERTED:
-        return
-    for conf, val in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as LTZ, not
-        # NTZ — see session.py DEFAULT_CONFS for the rationale.
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(conf, val)
-        except Exception:
-            # Static in some builds; if it is and events can't be read, the
-            # error surfaces at scan time with a clear parquet-type message.
-            pass
-    _CONFS_ASSERTED.add(app)
-    # One dead-session sweep per new session (ADVICE r17 #3): drop memo
-    # entries (and asserted-flag ids) from stopped applications so
-    # multi-session processes can't grow these maps without bound.
-    for memo in (_PLAN_MEMO, _SCHEMA_MEMO):
-        for k in [k for k in memo if k[0] != app]:
-            memo.pop(k, None)
-    _CONFS_ASSERTED.intersection_update({app})
+
+    def assert_confs() -> None:
+        for conf, val in (
+            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+            # TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as LTZ,
+            # not NTZ — see session.py DEFAULT_CONFS for the rationale.
+            ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+        ):
+            try:
+                spark.conf.set(conf, val)
+            except Exception:
+                # Static in some builds; if it is and events can't be
+                # read, the error surfaces at scan time with a clear
+                # parquet-type message.
+                pass
+
+    memo(spark, "parquet_read_confs", [], assert_confs)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -106,37 +69,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       microsecond precision (integer division truncates, matching DuckDB).
     - ``embeddings.embedding``: already ``array<float>``; left as-is.
 
-    The analyzed plan is memoized per (session, path, file fingerprint)
-    — see ``_PLAN_MEMO`` above. DataFrames are immutable, so handing the
-    same object to every caller is safe.
+    The analyzed plan is a ``cacheutil.memo`` entry per (session, path),
+    valid while the file fingerprint holds (r17 optimization, guide §6
+    "file listing"): a fresh ``spark.read.parquet`` is a py4j round-trip
+    plus a driver-side FileIndex build and footer read (~150 ms on the
+    bench rig), and a bench pass makes ~500 such calls. Nothing is
+    persisted — every action still scans the parquet files in full.
+    DataFrames are immutable, so handing the same object to every caller
+    is safe.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     ensure_parquet_read_confs(spark)
-    memo_key = (_app_id(spark), os.path.abspath(path))
-    fp = _table_fingerprint(path)
-    hit = _PLAN_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    # Defensive: if an externally-created session pinned NTZ inference on
-    # before our conf.set (parquet confs are read at scan creation), cast
-    # any NTZ column to LTZ. Under the UTC session TZ this is value-stable
-    # and a no-op when the conf above took effect.
-    ntz_cols = [
-        f.name for f in df.schema.fields
-        if isinstance(f.dataType, T.TimestampNTZType)
-    ]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
-    _PLAN_MEMO[memo_key] = (fp, df)
-    return df
 
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+            df = df.withColumn(
+                "ts", F.timestamp_micros(F.expr("ts div 1000"))
+            )
+        # Defensive: if an externally-created session pinned NTZ inference
+        # on before our conf.set (parquet confs are read at scan creation),
+        # cast any NTZ column to LTZ. Under the UTC session TZ this is
+        # value-stable and a no-op when the conf above took effect.
+        ntz_cols = [
+            f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.TimestampNTZType)
+        ]
+        for c in ntz_cols:
+            df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
+        return df
 
-_SCHEMA_MEMO: dict[tuple[str, str], tuple[str, T.StructType]] = {}
+    return memo(spark, f"load_table:{os.path.abspath(path)}", [path], read)
 
 
 def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -145,21 +108,16 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     :func:`ensure_parquet_read_confs`, so callers no longer need their
     own per-run conf.set round-trip; ADVICE r17 #2: the memo is only
     valid under those confs, and this function now pins them itself),
-    memoized per (session, path, file fingerprint) — the schema-probe
-    twin of the ``load_table`` plan memo. The streaming builders call
+    memoized like the ``load_table`` plan. The streaming builders call
     ``spark.read.parquet(src).schema`` once per run just to type their
     readStream; that probe costs a driver-side FileIndex + footer read
     (~150 ms) each time for an answer that cannot change while the
     fingerprint is stable."""
     ensure_parquet_read_confs(spark)
-    memo_key = (_app_id(spark), os.path.abspath(path))
-    fp = _table_fingerprint(path)
-    hit = _SCHEMA_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _SCHEMA_MEMO[memo_key] = (fp, schema)
-    return schema
+    return memo(
+        spark, f"parquet_schema:{os.path.abspath(path)}", [path],
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int | None:

@@ -12,7 +12,7 @@ any table scanned >= FLAG_AT times in one plan.
 Plan-time scan counts are an UPPER bound on runtime work, for two
 reasons the audit accounts for:
 
-- **Cached subtrees echo their plan.** `session_persist`ed DataFrames
+- **Cached subtrees echo their plan.** Persisted `cacheutil.memo` DataFrames
   (pagerank edges, the shingle index, ANN fits) appear as
   InMemoryTableScan nodes whose toString echoes the cached plan's
   FileScans once per reference — pagerank "scans orders 22x" in the

@@ -10,6 +10,7 @@ import math
 import pandas as pd
 import pytest
 
+from databricks_feature_store_poc_spark.llm.multimodal import JPEG_HUFF_LUT_CAP
 from tests.conftest import SF_TEST
 
 
@@ -209,11 +210,11 @@ def test_tfidf_integer_columns_exact(spark):
 # --- mm_decode_jpeg: sixth codec, foreign payloads --------------------------
 
 
-def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0):
+def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0, dc_vals=None):
     """Test-local general baseline-grayscale encoder: arbitrary
     ZIGZAG-order quantized coefficients per block (dense AC, ZRL runs),
-    optional restart interval — payload shapes the engine encoder never
-    emits."""
+    optional restart interval and DC table symbol order — payload shapes
+    the engine encoder never emits."""
     import struct
 
     from databricks_feature_store_poc_spark.llm.multimodal import (
@@ -224,7 +225,8 @@ def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0):
         jpeg_canonical_codes,
     )
 
-    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
+    dc_vals = JPEG_DC_VALS if dc_vals is None else dc_vals
+    dc_codes = jpeg_canonical_codes(JPEG_DC_BITS, dc_vals)
     ac_codes = jpeg_canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
     w, h = 8 * bw, 8 * bh
     out = bytearray(b"\xff\xd8")
@@ -234,8 +236,8 @@ def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0):
         + struct.pack(">HH", h, w) + b"\x01" + bytes([1, 0x11, 0])
     )
     out += (
-        b"\xff\xc4" + struct.pack(">H", 19 + len(JPEG_DC_VALS))
-        + b"\x00" + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
+        b"\xff\xc4" + struct.pack(">H", 19 + len(dc_vals))
+        + b"\x00" + bytes(JPEG_DC_BITS) + bytes(dc_vals)
     )
     out += (
         b"\xff\xc4" + struct.pack(">H", 19 + len(JPEG_AC_VALS))
@@ -284,7 +286,7 @@ def _ref_jpeg(coeff_blocks, bw, bh, qtable, dri=0):
         diff = zz[0] - pred
         pred = zz[0]
         cat = abs(diff).bit_length()
-        code, ln = jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)[cat]
+        code, ln = dc_codes[cat]
         put(code, ln)
         if cat:
             put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
@@ -390,12 +392,30 @@ def _decode_jpeg_foreign(payload):
     )
 
 
-@pytest.mark.parametrize("dri", [0, 2])
-def test_jpeg_decoder_dense_ac(dri):
+@pytest.mark.parametrize(
+    "dri,n_tables",
+    [
+        pytest.param(0, 1, id="0"),
+        pytest.param(2, 1, id="2"),
+        pytest.param(0, JPEG_HUFF_LUT_CAP + 3, id="more_tables_than_lut_cap"),
+    ],
+)
+def test_jpeg_decoder_dense_ac(dri, n_tables):
     """Foreign payload with dense AC coefficients, ZRL runs, and
     (parametrized) restart markers: the decoded weighted checksum must
-    equal an independent numpy IDCT of the same coefficients."""
+    equal an independent numpy IDCT of the same coefficients. With more
+    distinct DC tables than the reader's Huffman LUT memo holds, one
+    kernel decodes every payload the same and the memo stays capped."""
+    import inspect
     import random
+
+    from databricks_feature_store_poc_spark.llm.multimodal import (
+        _JPEG_GRAY,
+        JPEG_DC_BITS,
+        JPEG_DC_VALS,
+        _jpeg_entropy_tools,
+        _make_jpeg_reader,
+    )
 
     rng = random.Random(42)
     bw, bh = 3, 2
@@ -418,6 +438,24 @@ def test_jpeg_decoder_dense_ac(dri):
     )
     got = _decode_jpeg_foreign(payload)
     assert got == (8 * bw, 8 * bh, bw * bh, True, want), got
+    if n_tables == 1:
+        return
+    # the same code lengths with the symbols rotated: distinct tables
+    tables = [JPEG_DC_VALS[i:] + JPEG_DC_VALS[:i] for i in range(n_tables)]
+    kernel, _ = _make_jpeg_reader(**_JPEG_GRAY)
+    out = next(kernel(iter([pd.DataFrame({
+        "doc_id": range(n_tables),
+        "payload": [
+            _ref_jpeg(blocks, bw, bh, qtable, dri=dri, dc_vals=v) for v in tables
+        ],
+    })])))
+    assert out["header_consistent"].all()
+    assert out["pixel_checksum_weighted"].tolist() == [want] * n_tables
+    _, build_decode, _, _ = _jpeg_entropy_tools()
+    for v in tables:
+        build_decode(JPEG_DC_BITS, v)
+    memo = inspect.getclosurevars(build_decode).nonlocals["_huff_memo"]
+    assert len(memo) == JPEG_HUFF_LUT_CAP
 
 
 def test_jpeg_corruption_detected():

@@ -423,10 +423,10 @@ def test_gram_matrix_single_aggregate_shuffle(spark):
 
     # assert on the UNCACHED plan: if embed_pca_power ran earlier in the
     # session, its session-persisted gram cells plan-match this query and
-    # Spark substitutes an InMemoryTableScan, hiding the aggregate shape
-    from databricks_feature_store_poc_spark import cacheutil
+    # Spark substitutes an InMemoryTableScan, hiding the aggregate shape.
+    # Replacing the memo entry (another fingerprint) unpersists them.
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
-    for k in [k for k in cacheutil._CACHE if k[1] == "pca_gram_cells"]:
-        cacheutil._CACHE.pop(k).unpersist()
+    memo(spark, "pca_gram_cells", [], lambda: None)
     df = QUERIES["embed_gram_matrix"](spark, SF_TEST)
     assert count_exchanges(df) <= 1

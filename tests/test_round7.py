@@ -5,10 +5,12 @@ quantized-IVF ANN).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from databricks_feature_store_poc_spark.llm import curation, dedup, similarity
 from databricks_feature_store_poc_spark.registry import QUERIES, load_all_queries
-from tests.conftest import SF_TEST
+from tests.conftest import SF_SMOKE, SF_TEST
 from tests.harness import compare
 
 load_all_queries()
@@ -68,12 +70,48 @@ def test_simhash_audit_oracle_and_booleans(spark):
     assert row["n_exact_pairs"] > 0
 
 
-def test_simhash_fingerprints_memoized(spark):
-    from databricks_feature_store_poc_spark.llm.dedup import simhash_fingerprints
+@pytest.mark.parametrize(
+    "build,table,key",
+    [
+        pytest.param(dedup.simhash_fingerprints, "documents", "doc_id",
+                     id="simhash_fingerprints"),
+        pytest.param(dedup.shingle_index, "documents", "doc_id",
+                     id="shingle_index"),
+        pytest.param(curation._decon_shingles, "documents", "doc_id",
+                     id="decon_shingles"),
+        pytest.param(similarity._ivf_fit, "embeddings", "vec_id", id="ivf_fit"),
+    ],
+)
+def test_simhash_fingerprints_memoized(spark, tmp_path, build, table, key):
+    """A second call answers with the same object; after the source is
+    rewritten in place (even keys only), the call answers with a new
+    value that follows the file."""
+    import os
+    import shutil
 
-    a = simhash_fingerprints(spark, SF_TEST)
-    b = simhash_fingerprints(spark, SF_TEST)
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def frame(value):  # _ivf_fit answers (assigned, centers)
+        return value[0] if isinstance(value, tuple) else value
+
+    src = str(tmp_path / f"{table}.parquet")
+    shutil.copy(f"{SF_SMOKE}/{table}.parquet", src)
+    a = build(spark, str(tmp_path))
+    b = build(spark, str(tmp_path))
     assert a is b  # second consumer reuses the persisted table
+    n_before = frame(a).count()
+
+    t = pq.read_table(src)
+    pq.write_table(
+        t.filter(pc.equal(pc.bit_wise_and(t[key], 1), 0)),
+        str(tmp_path / "rewrite.parquet"),
+    )
+    os.replace(str(tmp_path / "rewrite.parquet"), src)
+    c = frame(build(spark, str(tmp_path)))
+    assert c is not frame(a)
+    assert 0 < c.count() < n_before
+    assert c.filter(F.col(key) % 2 == 1).count() == 0
 
 
 def test_overwrite_barrier_modes(spark):
@@ -120,6 +158,25 @@ def test_ivf_fit_memoized_across_variants(spark):
     a1, c1 = S._ivf_fit(spark, SF_TEST)
     a2, c2 = S._ivf_fit(spark, SF_TEST)
     assert a1 is a2 and c1 is c2
+
+
+def test_ivf_index_memo_keeps_one_persisted_index(spark, tmp_path):
+    """Each pass over a fresh copy of the corpus replaces the persisted
+    IVF index instead of adding one: the session's persisted RDD count
+    does not grow after the first copy."""
+    import shutil
+
+    from databricks_feature_store_poc_spark.cacheutil import release_checkpoints
+
+    held = []
+    for i in range(3):
+        copy = tmp_path / f"copy{i}"
+        copy.mkdir()
+        shutil.copy(f"{SF_SMOKE}/embeddings.parquet", copy / "embeddings.parquet")
+        QUERIES["sim_ivf_topk"](spark, str(copy)).collect()
+        release_checkpoints(spark)
+        held.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert max(held[1:]) <= held[0], held
 
 
 def test_entity_resolution_symbolic_pairs_match_materialized(spark):
