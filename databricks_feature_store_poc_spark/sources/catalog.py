@@ -48,7 +48,7 @@ def ensure_parquet_read_confs(spark: SparkSession) -> None:
         for conf, val in (
             ("spark.sql.legacy.parquet.nanosAsLong", "true"),
             # TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as LTZ,
-            # not NTZ — see session.py DEFAULT_CONFS for the rationale.
+            # not NTZ — see session.py SESSION_CONFS for the rationale.
             ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
         ):
             try:
