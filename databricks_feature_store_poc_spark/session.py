@@ -20,6 +20,23 @@ hold from local[32] test runs up to a 1000-executor cluster:
   is the same, so results are too. The cap is a launch-time conf:
   ``ensure_session_confs`` cannot apply it to a session the caller created,
   so such a session keeps Spark's 100.
+- ``spark.python.daemon.module`` set to the engine's ``pyworker``. Every
+  Python task (codec kernels, IVF ``cell_of``, ``score_batch``, online
+  sync) cost about 0.2 s of worker CPU whatever its row count, most of it
+  in the ``importlib.invalidate_caches()`` that PySpark's
+  ``setup_spark_files`` calls at the start of each task. On Python 3.11
+  and 3.12 that call makes each of the 14-16 zipimporters under
+  ``pyspark.zip`` (1,328 entries) re-read the archive's whole directory;
+  3.13's ``zipimporter.invalidate_caches`` only drops the cache entry.
+  ``pyworker`` re-reads an archive only when its fingerprint (mtime_ns and
+  size, as in ``cacheutil.source_fingerprint``) changed, then runs the
+  stock ``pyspark.daemon``. Worker CPU of a 10-row task on a reused
+  worker (Python 3.11.7, local[2], 4 vCPUs): 0.25 -> 0.04 s for
+  ``mapInPandas``, 0.23 -> 0.02 s for an RDD ``foreachPartition``.
+  Workers find the module through ``spark.executorEnv.PYTHONPATH``, which
+  ``get_spark`` points at the package's parent directory, so the JVM's
+  cwd does not matter. A session the caller created keeps the stock
+  daemon, as it keeps the codegen cap.
 """
 
 from __future__ import annotations
@@ -27,6 +44,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _install_jvm_function_cache() -> None:
@@ -110,6 +129,8 @@ LAUNCH_CONFS: dict[str, str] = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Generated-class cache size (see the module docstring).
     "spark.sql.codegen.cache.maxEntries": "4000",
+    # Python-worker daemon (see the module docstring).
+    "spark.python.daemon.module": "databricks_feature_store_poc_spark.pyworker",
     # Local test runs only; a real deployment sizes these per-cluster.
     "spark.ui.enabled": "false",
     "spark.driver.memory": _default_driver_mem(),
@@ -172,6 +193,10 @@ def get_spark(
         confs[k.strip()] = v.strip()
     if extra_confs:
         confs.update(extra_confs)
+    # The daemon module must be importable by the workers from any cwd; a
+    # path the caller passes comes after the package's.
+    key = "spark.executorEnv.PYTHONPATH"
+    confs[key] = os.pathsep.join(filter(None, (_PACKAGE_PARENT, confs.get(key))))
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -184,7 +209,8 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     (the driver hands us one in ``__spark_entry__.entry``).
 
     Launch-time confs cannot be applied here: such a session keeps its
-    own (for the codegen cache, Spark's default of 100 entries).
+    own (for the codegen cache, Spark's default of 100 entries, and the
+    stock Python-worker daemon).
     """
     for k, v in SESSION_CONFS.items():
         spark.conf.set(k, v)
