@@ -15,6 +15,8 @@ and tests exercise both the gated dispatch and the fallback semantics.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import SparkSession
 
 
@@ -28,35 +30,33 @@ def delta_available() -> bool:
         return False
 
 
-def table_provider(spark: SparkSession, name: str) -> str | None:
-    """The catalog provider of a saved table ('parquet', 'delta', ...)."""
-    try:
-        rows = spark.sql(f"DESCRIBE FORMATTED {name}").collect()
-    except Exception:
-        return None
-    for r in rows:
-        if (r["col_name"] or "").strip() == "Provider":
-            return (r["data_type"] or "").strip().lower()
-    return None
-
-
 def table_layout(spark: SparkSession, name: str) -> dict:
     """Physical layout of a saved table: provider, partition columns,
     bucket spec — everything an in-place rewrite must re-apply to avoid
     silently destroying the clustering ``create_table`` set up (partition
-    pruning and shuffle-free bucketed joins die quietly otherwise)."""
-    cols = spark.catalog.listColumns(name)
-    layout = {
-        "provider": table_provider(spark, name),
-        "partition_by": [c.name for c in cols if c.isPartition],
-        "bucket_by": [c.name for c in cols if c.isBucket],
-        "n_buckets": None,
+    pruning and shuffle-free bucketed joins die quietly otherwise).
+
+    One catalog metadata read (``DESCRIBE TABLE EXTENDED ... AS JSON``)
+    answers all of it and starts no Spark job; ``catalog.listColumns``
+    would run two. Bucket columns come back in bucket-spec order, which
+    is the order the bucket hash uses."""
+    row = spark.sql(f"DESCRIBE TABLE EXTENDED {name} AS JSON").collect()[0]
+    meta = json.loads(row[0])
+    provider = meta.get("provider")
+    return {
+        "provider": provider.lower() if provider else None,
+        "partition_by": meta.get("partition_columns") or [],
+        "bucket_by": meta.get("bucket_columns") or [],
+        "n_buckets": meta.get("num_buckets"),
     }
-    if layout["bucket_by"]:
-        for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
-            if (r["col_name"] or "").strip() == "Num Buckets":
-                layout["n_buckets"] = int((r["data_type"] or "0").strip())
-    return layout
+
+
+def table_provider(spark: SparkSession, name: str) -> str | None:
+    """The catalog provider of a saved table ('parquet', 'delta', ...)."""
+    try:
+        return table_layout(spark, name)["provider"]
+    except Exception:
+        return None
 
 
 def resolve_write_format(requested: str | None) -> tuple[str, str]:

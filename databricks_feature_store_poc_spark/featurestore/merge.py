@@ -120,7 +120,7 @@ def merge_into_table(
     persist on a cluster). Not transactional — which is exactly the gap
     the delta flag closes where available.
     """
-    from .deltafmt import delta_available, table_layout, table_provider
+    from .deltafmt import delta_available, table_layout
 
     # Enforce what merge_upsert only documents: an update batch with
     # duplicate keys makes DeltaTable.merge throw mid-merge while the
@@ -148,7 +148,8 @@ def merge_into_table(
                 f"duplicate key sample: {sample}"
             )
 
-        if delta_available() and table_provider(spark, table_name) == "delta":
+        layout = table_layout(spark, table_name)
+        if delta_available() and layout["provider"] == "delta":
             from delta.tables import DeltaTable
 
             cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
@@ -161,7 +162,6 @@ def merge_into_table(
                 .execute()
             )
             return
-        layout = table_layout(spark, table_name)
         merged = merge_upsert(
             spark.table(table_name), updates, keys,
             broadcast_updates=broadcast_updates,

@@ -135,34 +135,6 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(spark, "shingle_index", src, build, persist=True)
 
 
-def _jaccard_for_pairs(idx: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard for a GIVEN candidate pair set (doc_a, doc_b).
-
-    Shared-shingle counts come from joining the index to the pair list on
-    each side — cost O(candidates x shingles-per-doc), NOT all-pairs.
-    This is what makes LSH verification honest at scale: the expensive
-    exact computation touches only what the buckets surfaced.
-    """
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = idx.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = idx.select(F.col("doc_id").alias("doc_b"), "shingle")
-    shared = (
-        pairs.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    return (
-        shared.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def _jaccard_pairs_from_index(idx: DataFrame) -> DataFrame:
     """Exact Jaccard pairs from a (doc_id, shingle) index via self-join."""
     sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
@@ -260,10 +232,11 @@ _MINHASH_BANDS = 4
 _MH_MASK = (1 << 48) - 1
 
 
-def _mh_sigs_spark(idx: DataFrame, n_lanes: int) -> DataFrame:
+def _mh_sigs_spark(idx: DataFrame, n_lanes: int, *extra_aggs: str) -> DataFrame:
     """Per-doc minhash signature columns mh0..mh{n-1} from a
     (doc_id, shingle) index — one md5 per shingle, lanes by integer
-    arithmetic, one groupBy.
+    arithmetic, one groupBy. ``extra_aggs`` are further aggregate
+    expressions over (doc_id, shingle) computed in the same groupBy.
 
     Built from sql-string expressions (r18 floor, VERDICT r17 #1): the
     column-object form cost ~1,500 py4j round-trips per build (16 lanes
@@ -275,6 +248,7 @@ def _mh_sigs_spark(idx: DataFrame, n_lanes: int) -> DataFrame:
     signature-equivalence tests."""
     hashed = idx.selectExpr(
         "doc_id",
+        "shingle",
         "CAST(conv(substring(md5(shingle), 1, 12), 16, 10) AS BIGINT)"
         " AS mh_h1",
         "CAST(conv(substring(md5(shingle), 13, 12), 16, 10) AS BIGINT)"
@@ -284,8 +258,25 @@ def _mh_sigs_spark(idx: DataFrame, n_lanes: int) -> DataFrame:
         *[
             F.expr(f"min((mh_h1 + {i} * mh_h2) & {_MH_MASK}) AS mh{i}")
             for i in range(n_lanes)
-        ]
+        ],
+        *[F.expr(x) for x in extra_aggs],
     )
+
+
+def _mh_bands(sigs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, band, k0..k3): one row per document and band,
+    keyed by the band's raw minhash 4-tuple (oracle-reproducible, not a
+    hash of it). One parsed expression builds all four band structs."""
+    band_structs = ", ".join(
+        "named_struct('band', {b}, {ks})".format(
+            b=b,
+            ks=", ".join(f"'k{r}', mh{b * 4 + r}" for r in range(4)),
+        )
+        for b in range(_MINHASH_BANDS)
+    )
+    return sigs.selectExpr(
+        "doc_id", *keep, f"explode(array({band_structs})) AS bk"
+    ).selectExpr("doc_id", *keep, "bk.band", "bk.k0", "bk.k1", "bk.k2", "bk.k3")
 
 
 def _mh_half_duck(pos: int) -> str:
@@ -370,55 +361,52 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset of dedup_ngram_jaccard's (containment pinned in tests); LSH
     with these parameters catches ~all pairs at jaccard >= 0.5 and most at
     0.3 (p = 1-(1-j^4)^4). md5 costs ~10x xxhash64 per lane but stays
-    JVM-side and map-only; the shuffles (signature groupBy, band join)
-    are unchanged.
+    JVM-side and map-only.
+
+    Verification needs no join: the signature groupBy also collects
+    each document's shingle list, the band rows carry it with the 16
+    lanes, and the band self-join keeps one row per candidate pair (the
+    row of the first band the pair shares), whose n_shared_bands is the
+    number of bands with four equal lanes. The candidate pairs are used
+    once, and building the plan starts no job. ``shared`` counts shingle
+    matches as a multiset, like the oracle's COUNT(*) over ``kept``: a
+    doc_id that occurs on several rows can list a shingle more than
+    once. Lists without repeats (the usual case) take the
+    ``size(array_intersect)`` shortcut, which equals that count only
+    then. The band join's shuffle carries each list once per band.
     """
     idx = shingle_index(spark, sf_dir)
-    sigs = _mh_sigs_spark(idx, _MINHASH_LANES)
-    # 4 bands of 4 rows; the JOIN KEY is the band's minhash 4-tuple
-    # itself (oracle-reproducible), not a hash of it.
-    # expression-string form (r18 floor, VERDICT r17 #1): identical
-    # plan to the old column-object construction, ~1/10th the py4j
-    # round-trips during build
-    band_structs = ", ".join(
-        "named_struct('band', {b}, {ks})".format(
-            b=b,
-            ks=", ".join(f"'k{r}', mh{b * 4 + r}" for r in range(4)),
-        )
+    sigs = _mh_sigs_spark(idx, _MINHASH_LANES, "collect_list(shingle) AS sh")
+    bands = _mh_bands(sigs, *[f"mh{i}" for i in range(_MINHASH_LANES)], "sh")
+    band_eq = [
+        "(" + " AND ".join(f"a.mh{b * 4 + r} = b.mh{b * 4 + r}" for r in range(4)) + ")"
         for b in range(_MINHASH_BANDS)
-    )
-    bands = sigs.selectExpr(
-        "doc_id", f"explode(array({band_structs})) AS bk"
-    ).selectExpr("doc_id", "bk.band", "bk.k0", "bk.k1", "bk.k2", "bk.k3")
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            F.expr(
-                "a.band = b.band AND a.k0 = b.k0 AND a.k1 = b.k1"
-                " AND a.k2 = b.k2 AND a.k3 = b.k3"
-                " AND a.doc_id < b.doc_id"
-            ),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.expr("CAST(count(1) AS INT) AS n_shared_bands"))
-        # localCheckpoint (r17 optimization): candidates feeds BOTH the
-        # exact-Jaccard verification and the final n_shared_bands
-        # join-back — without truncation the signature groupBy + band
-        # self-join executes twice per run (and dedup_minhash_audit,
-        # which calls this query, paid it twice more). The table is the
-        # LSH bucket output: O(candidate pairs) by construction, the
-        # smallest relation this pipeline holds.
-        .transform(_ckpt)
+    ]
+    pairs = bands.alias("a").join(
+        bands.alias("b"),
+        F.expr(
+            "a.band = b.band AND a.k0 = b.k0 AND a.k1 = b.k1"
+            " AND a.k2 = b.k2 AND a.k3 = b.k3 AND a.doc_id < b.doc_id"
+            f" AND a.band = array_position(array({', '.join(band_eq)}), true) - 1"
+        ),
     )
     # Verify ONLY the candidates — computing all exact pairs here would
     # defeat the LSH: verification cost must scale with bucket output.
-    verified = _jaccard_for_pairs(idx, candidates.select("doc_a", "doc_b"))
-    return verified.join(candidates, ["doc_a", "doc_b"]).select(
-        "doc_a", "doc_b", "jaccard", "n_shared_bands"
+    return (
+        pairs.selectExpr(
+            "a.doc_id AS doc_a", "b.doc_id AS doc_b",
+            " + ".join(f"CAST({e} AS INT)" for e in band_eq) + " AS n_shared_bands",
+            "size(a.sh) AS na", "size(b.sh) AS nb",
+            "CAST(IF(size(array_distinct(a.sh)) < size(a.sh)"
+            " OR size(array_distinct(b.sh)) < size(b.sh),"
+            " aggregate(a.sh, 0, (m, x) -> m + size(filter(b.sh, y -> y = x))),"
+            " size(array_intersect(a.sh, b.sh))) AS BIGINT) AS shared",
+        )
+        .selectExpr(
+            "doc_a", "doc_b", "shared / (na + nb - shared) AS jaccard",
+            "n_shared_bands",
+        )
+        .filter(f"jaccard >= {JACCARD_THRESHOLD!r}D")
     )
 
 
@@ -840,23 +828,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = shingle_index(spark, sf_dir)
     sigs = _mh_sigs_spark(idx, _MINHASH_LANES)
     key_cols = ["band", "k0", "k1", "k2", "k3"]
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"mh{b * 4 + r}").alias(f"k{r}")
-                            for r in range(4)
-                        ],
-                    )
-                    for b in range(_MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", *[F.col(f"bk.{c}").alias(c) for c in key_cols])
+    bands = _mh_bands(sigs)
     roots = bands.groupBy(*key_cols).agg(F.min("doc_id").alias("root"))
     star = (
         bands.join(roots, key_cols)

@@ -31,7 +31,10 @@ from pyspark.sql import functions as F
 
 from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.registry import query
-from databricks_feature_store_poc_spark.sources.catalog import load_table
+from databricks_feature_store_poc_spark.sources.catalog import (
+    load_table,
+    parquet_row_count,
+)
 
 N_QUERIES = 10      # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -120,22 +123,26 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     v = _with_norm(_valid(e).select("vec_id", _as_double("embedding").alias("e")))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("q_e"), F.col("nrm").alias("q_n")
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("c_e"), F.col("nrm").alias("c_n")
-    )
-    pairs = F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id"))
-    cos = F.expr(_DOT.format(a="q_e", b="c_e")) / (F.col("q_n") * F.col("c_n"))
-    from pyspark.sql.window import Window
+    q = v.filter(f"vec_id < {N_QUERIES}").toDF("query_id", "q_e", "q_n")
+    c = v.toDF("neighbor_id", "c_e", "c_n")
+    pairs = F.broadcast(q).join(c, F.expr("neighbor_id != query_id"))
+    return _top_k_by_cosine(pairs)
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+
+def _top_k_by_cosine(pairs: DataFrame) -> DataFrame:
+    """Per query_id, the TOP_K (query_id, neighbor_id, cosine) rows of
+    ``pairs`` (q_e, q_n, c_e, c_n) by exact cosine, ties broken on
+    neighbor_id; cosine rounded to 6 decimals after ranking. Written as
+    SQL expression strings: one py4j round-trip per expression."""
+    cos = f"({_DOT.format(a='q_e', b='c_e')}) / (q_n * c_n)"
     return (
-        pairs.withColumn("cos_raw", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
+        pairs.selectExpr("query_id", "neighbor_id", f"{cos} AS cos_raw")
+        .selectExpr(
+            "*", "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY cos_raw DESC, neighbor_id) AS rn",
+        )
+        .filter(f"rn <= {TOP_K}")
+        .selectExpr("query_id", "neighbor_id", "round(cos_raw, 6) AS cosine")
     )
 
 
@@ -223,24 +230,24 @@ def sim_ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "q_e", "q_n", "c_e", "c_n")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cos = F.expr(_DOT.format(a="q_e", b="c_e")) / (F.col("q_n") * F.col("c_n"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn("cos_raw", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _top_k_by_cosine(candidates)
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str):
     """Fit-and-assign for the IVF index: returns (assigned, centers)
-    where ``assigned`` is the persisted (vec_id, e, nrm, cell) corpus
-    and ``centers`` the K_CELLS x DIM centroid lists. Both are one
+    where ``assigned`` is the persisted (vec_id, e, nrm, cell, d2)
+    corpus and ``centers`` the K_CELLS x DIM centroid lists. Both are one
     persisted memo entry, so the float and quantized searches share ONE
     fit and ONE assignment pass.
+
+    ``d2`` is NULL on corpus rows; on query rows (vec_id < N_QUERIES) it
+    holds the squared distance to each centroid, in cell order, which is
+    all ``_ivf_probed_queries`` needs to rank cells. The assignment
+    kernel computes it next to ``cell`` from the same broadcast matrix,
+    as the left fold Spark's ``aggregate(zip_with(e, c, (x - y) *
+    (x - y)), 0D, (s, x) -> s + x)`` runs, so the values are the ones
+    that expression gives, bit for bit, without k x dim literals in the
+    plan.
 
     The second ANN scale path next to sim_ann_lsh, with the opposite
     trade-off: LSH needs no training and handles streaming inserts;
@@ -257,7 +264,10 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
 
     Deterministic: the sample is a vec_id-hash filter sorted before the
     fit and Lloyd is seeded; recall vs the exact brute force is pinned in
-    tests/test_llm.py.
+    tests/test_llm.py. The valid-row count that sizes the hash filter is
+    a Spark job, so it is skipped when the parquet footers already show
+    at most SAMPLE_CAP rows: the whole corpus is then the sample either
+    way.
     """
     import numpy as np
 
@@ -265,7 +275,10 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
         e = load_table(spark, sf_dir, "embeddings")
         v = _with_norm(_valid(e).select("vec_id", _as_double("embedding").alias("e")))
 
-        n_corpus = v.count()
+        # the footers bound the valid-row count from above
+        n_corpus = parquet_row_count(sf_dir, "embeddings")
+        if n_corpus is None or n_corpus > SAMPLE_CAP:
+            n_corpus = v.count()
         sample = v
         if n_corpus > SAMPLE_CAP:
             # keep ~SAMPLE_CAP rows via a deterministic hash mod — same rows
@@ -278,8 +291,11 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
         )
         if not rows:
             # degenerate corpus (r11): nothing to fit — an empty assignment
-            # with zero centers; downstream probe/rerank stages short-circuit
-            return v.withColumn("cell", F.lit(0).cast("int")).limit(0), []
+            # with zero centers, so the probe list and the search are empty
+            return v.select(
+                "*", F.lit(0).cast("int").alias("cell"),
+                F.lit(None).cast("array<double>").alias("d2"),
+            ).limit(0), []
         X = np.array([r["e"] for r in rows], dtype=np.float64)
 
         def lloyd(X: np.ndarray, k: int, iters: int = 20, seed: int = 42) -> np.ndarray:
@@ -313,15 +329,32 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
         C = lloyd(X, K_CELLS)
         bc = spark.sparkContext.broadcast(C)
 
-        @F.pandas_udf("int")
-        def cell_of(emb: pd.Series) -> pd.Series:
+        @F.pandas_udf("struct<cell: int, d2: array<double>>")
+        def cell_of(vec_id: pd.Series, emb: pd.Series) -> pd.DataFrame:
             cen = bc.value
             M = np.array(list(emb), dtype=np.float64)
             d2 = (cen * cen).sum(axis=1)[None, :] - 2.0 * (M @ cen.T)
-            return pd.Series(d2.argmin(axis=1).astype("int32"))
+            probe = [None] * len(M)
+            is_q = (vec_id < N_QUERIES).to_numpy()
+            if is_q.any():
+                # one (x - c)^2 term per dimension, added left to right
+                # from 0.0: the order Spark's aggregate folds in
+                Q = M[is_q]
+                acc = np.zeros((len(Q), len(cen)))
+                for j in range(Q.shape[1]):
+                    diff = Q[:, j:j + 1] - cen[None, :, j]
+                    acc = acc + diff * diff
+                for i, row in zip(np.flatnonzero(is_q), acc):
+                    probe[i] = row
+            return pd.DataFrame(
+                {"cell": d2.argmin(axis=1).astype("int32"), "d2": probe}
+            )
 
         centers = [list(map(float, c)) for c in C]
-        return v.withColumn("cell", cell_of("e")), centers
+        kernel = cell_of("vec_id", "e")
+        return v.select(
+            "*", kernel["cell"].alias("cell"), kernel["d2"].alias("d2")
+        ), centers
 
     # The cell assignment IS the IVF index — persist it so the query
     # side, the corpus side of the probe join, and the recall audit all
@@ -333,39 +366,25 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
     return memo(spark, "ivf_index", src, fit, persist=True)
 
 
-def _ivf_probed_queries(assigned: DataFrame, centers: list) -> DataFrame:
-    """Query side of IVF search: rank the broadcast centroids by distance
-    and keep the NPROBE nearest (centroids inlined as literals — k x dim
-    doubles). Returns (query_id, q_e, q_n, cell)."""
-    q = assigned.filter(F.col("vec_id") < N_QUERIES)
-    if not centers:
-        # F.array() of zero columns is untyped (analysis error) — emit a
-        # typed empty probe list instead
-        return q.select(
-            F.col("vec_id").alias("query_id"), F.col("e").alias("q_e"),
-            F.col("nrm").alias("q_n"), F.lit(0).cast("int").alias("cell"),
-        ).limit(0)
-    cell_rows = []
-    for ci, c in enumerate(centers):
-        arr = "array({})".format(", ".join(f"{w!r}D" for w in c))
-        dist = (
-            f"aggregate(zip_with(e, {arr}, (x, y) -> (x - y) * (x - y)), "
-            f"0D, (s, x) -> s + x)"
+def _ivf_probed_queries(assigned: DataFrame) -> DataFrame:
+    """Query side of IVF search: rank the cells by the query row's
+    centroid distances (``d2``, from the assignment kernel) and keep the
+    NPROBE nearest, ties broken by cell. The window is per query_id, so
+    query rows that share a vec_id share one NPROBE budget. Returns
+    (query_id, q_e, q_n, cell)."""
+    return (
+        assigned.filter(f"vec_id < {N_QUERIES}")
+        .selectExpr(
+            "vec_id AS query_id", "e AS q_e", "nrm AS q_n",
+            "posexplode(d2) AS (cell, d2)",
         )
-        cell_rows.append(F.struct(F.lit(ci).alias("cell"), F.expr(dist).alias("d2")))
-    probes = (
-        q.select(
-            F.col("vec_id").alias("query_id"), F.col("e").alias("q_e"),
-            F.col("nrm").alias("q_n"),
-            F.explode(F.array(*cell_rows)).alias("cd"),
+        .selectExpr(
+            "*", "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY d2, cell) AS pr",
         )
-        .select("query_id", "q_e", "q_n",
-                F.col("cd.cell").alias("cell"), F.col("cd.d2").alias("d2"))
+        .filter(f"pr <= {NPROBE}")
+        .select("query_id", "q_e", "q_n", "cell")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    return probes.withColumn("pr", F.row_number().over(w_probe)).filter(
-        F.col("pr") <= NPROBE
-    ).select("query_id", "q_e", "q_n", "cell")
 
 
 def _ivf_rerank(probed: DataFrame, candidates: DataFrame) -> DataFrame:
@@ -375,27 +394,19 @@ def _ivf_rerank(probed: DataFrame, candidates: DataFrame) -> DataFrame:
     cand = (
         F.broadcast(probed)
         .join(candidates, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .filter("neighbor_id != query_id")
     )
-    cos = F.expr(_DOT.format(a="q_e", b="c_e")) / (F.col("q_n") * F.col("c_n"))
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("cos_raw", cos)
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _top_k_by_cosine(cand)
 
 
 def sim_ivf_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 neighbors via IVF: probe the NPROBE nearest of
     K_CELLS learned cells, rerank candidates by exact float cosine. See
     _ivf_fit for the index build and the 100 TB cost shape."""
-    assigned, centers = _ivf_fit(spark, sf_dir)
-    probed = _ivf_probed_queries(assigned, centers)
-    c = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("c_e"),
-        F.col("nrm").alias("c_n"), "cell",
+    assigned, _ = _ivf_fit(spark, sf_dir)
+    probed = _ivf_probed_queries(assigned)
+    c = assigned.selectExpr(
+        "vec_id AS neighbor_id", "e AS c_e", "nrm AS c_n", "cell"
     )
     return _ivf_rerank(probed, c)
 
@@ -418,8 +429,8 @@ def sim_ivf_quantized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     information a quantized index would retain. Zero-vector rows keep
     their float form (amax = 0 has no int8 code) — they rank last under
     cosine either way."""
-    assigned, centers = _ivf_fit(spark, sf_dir)
-    probed = _ivf_probed_queries(assigned, centers)
+    assigned, _ = _ivf_fit(spark, sf_dir)
+    probed = _ivf_probed_queries(assigned)
     dq = _DEQUANT.format(e="e", amax="amax")
     c = (
         assigned.withColumn(
@@ -477,26 +488,21 @@ def _recall_audit(
     # Distinct-project both sides first; k below is then "distinct
     # exact neighbors", which the oracle computes the same way.
     hits = exact.select("query_id", "neighbor_id").distinct().join(
-        ann.select("query_id", "neighbor_id").distinct()
-        .withColumn("hit", F.lit(1)),
+        ann.selectExpr("query_id", "neighbor_id", "1 AS hit").distinct(),
         ["query_id", "neighbor_id"],
         "left",
     )
     per_q = hits.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
+        F.expr("count(1) AS k"), F.expr("sum(coalesce(hit, 0)) AS n_hit")
     )
     # Global recall via an unpartitioned window over per_q (|Q| rows, one
     # tiny partition) — NOT a separate agg + crossJoin, which would put
     # per_q's lineage (both full searches) in the plan twice and execute
     # the exact AND approximate searches two times each.
-    w_all = Window.partitionBy()
-    return per_q.select(
+    return per_q.selectExpr(
         "query_id",
         "k",
-        (
-            (F.sum("n_hit").over(w_all) / F.sum("k").over(w_all)) >= floor
-        ).alias("recall_ok"),
+        f"sum(n_hit) OVER () / sum(k) OVER () >= {float(floor)!r}D AS recall_ok",
     )
 
 

@@ -90,6 +90,44 @@ class TestDeltaGate:
             fs.drop_table("fs_merge_dup")
 
 
+@pytest.mark.parametrize(
+    "kwargs,expected",
+    [
+        pytest.param({}, ([], [], None), id="plain"),
+        pytest.param({"partition_by": ["p"]}, (["p"], [], None),
+                     id="partitioned"),
+        pytest.param({"bucket_by": (4, ["p", "k"])}, ([], ["p", "k"], 4),
+                     id="bucketed"),
+    ],
+)
+def test_merge_into_table_keeps_layout(spark, tmp_path, kwargs, expected):
+    """table_layout reads provider, partition columns and bucket spec
+    (bucket columns in spec order) from the catalog, and a merge that
+    rewrites the table in place leaves all of them as they were."""
+    from databricks_feature_store_poc_spark.featurestore.deltafmt import (
+        table_layout,
+    )
+
+    partition_by, bucket_by, n_buckets = expected
+    want = {"provider": "parquet", "partition_by": partition_by,
+            "bucket_by": bucket_by, "n_buckets": n_buckets}
+    fs = FeatureStore(spark, meta_dir=str(tmp_path))
+    df = spark.createDataFrame(
+        [(1, 10.0, "a"), (2, 20.0, "b")], ["k", "v", "p"]
+    )
+    fs.create_table("fs_merge_layout", ["k"], df, **kwargs)
+    try:
+        assert table_layout(spark, "fs_merge_layout") == want
+        updates = spark.createDataFrame([(2, 21.0, "b"), (3, 30.0, "a")],
+                                        ["k", "v", "p"])
+        merge_into_table(spark, "fs_merge_layout", updates, ["k"])
+        assert table_layout(spark, "fs_merge_layout") == want
+        got = {r["k"]: r["v"] for r in spark.table("fs_merge_layout").collect()}
+        assert got == {1: 10.0, 2: 21.0, 3: 30.0}
+    finally:
+        fs.drop_table("fs_merge_layout")
+
+
 def _stub_mlflow(calls: list):
     """Minimal mlflow façade recording every delegation call."""
     mod = types.ModuleType("mlflow")

@@ -302,3 +302,179 @@ def test_frame_sample_empty_text_parity(spark, tmp_path):
     con.close()
     assert srows == drows
     assert (1, 0, 0, 0) in srows  # empty doc: one frame, checksum 0
+
+
+def _write_parquet(spark, rows, schema, path):
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def test_minhash_matches_oracle_with_repeated_doc_ids(spark, tmp_path):
+    """dedup_near_minhash equals its DuckDB oracle on a corpus where one
+    doc_id names two rows with different text (so its shingle list
+    repeats shingles) and some documents are shorter than a shingle. The
+    corpus is chosen so that counting shared shingles as a set would
+    give a different Jaccard on an emitted pair: the set-only
+    array_intersect shortcut cannot pass this test."""
+    import duckdb
+
+    from databricks_feature_store_poc_spark.llm.dedup import SHINGLE_WORDS
+    from databricks_feature_store_poc_spark.registry import ORACLES
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = [
+        (1, base),
+        (1, base.replace("bank", "bend")),
+        (2, base),
+        (3, base + " at dawn today"),
+        (4, "too short here"),
+        (5, ""),
+        (6, "an entirely different sentence about spark shuffles and joins"),
+    ]
+    _write_parquet(
+        spark, docs, "doc_id long, text string",
+        str(tmp_path / "documents.parquet"),
+    )
+    srows = sorted(
+        map(tuple, QUERIES["dedup_near_minhash"](spark, str(tmp_path)).collect())
+    )
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet/*.parquet'"
+    )
+    drows = sorted(
+        map(tuple, con.sql(ORACLES["dedup_near_minhash"]).fetchall())
+    )
+    con.close()
+    assert srows and srows == drows
+
+    def shingles(text):
+        w = text.split()
+        return [
+            " ".join(w[i:i + SHINGLE_WORDS])
+            for i in range(len(w) - SHINGLE_WORDS + 1)
+        ]
+
+    per_doc = {}
+    for doc_id, text in docs:
+        per_doc.setdefault(doc_id, []).extend(dict.fromkeys(shingles(text)))
+
+    def set_only(a, b):
+        inter = len(set(per_doc[a]) & set(per_doc[b]))
+        return inter / (len(per_doc[a]) + len(per_doc[b]) - inter)
+
+    assert any(set_only(a, b) != j for a, b, j, _ in srows)
+
+
+def _literal_probe_expr(assigned, centers):
+    """Reference for the kernel's distances: one (cell, d2) struct per
+    centroid, d2 folded by Spark's aggregate over the centroid inlined
+    as an array of double literals."""
+    from databricks_feature_store_poc_spark.llm import similarity as S
+
+    q = assigned.filter(F.col("vec_id") < S.N_QUERIES)
+    cells = []
+    for ci, c in enumerate(centers):
+        arr = "array({})".format(", ".join(f"{w!r}D" for w in c))
+        cells.append(F.struct(
+            F.lit(ci).alias("cell"),
+            F.expr(
+                f"aggregate(zip_with(e, {arr}, (x, y) -> (x - y) * (x - y)),"
+                f" 0D, (s, x) -> s + x)"
+            ).alias("d2"),
+        ))
+    return q, F.array(*cells)
+
+
+def test_ivf_kernel_distances_match_spark_expression(spark, tmp_path):
+    """The assignment kernel's per-cell distances equal the Spark
+    expression over centroid literals bit for bit, and the probe lists
+    equal the ones that expression ranks, on SF_TEST and on a corpus
+    built for ties: query 0 is equidistant from two centroids, two
+    corpus vectors are identical (so the fit can return identical
+    centroids), and vec_id 0 names two query rows that share one
+    NPROBE budget."""
+    from pyspark.sql import Window
+
+    from databricks_feature_store_poc_spark.llm import similarity as S
+
+    def unit(*pairs):
+        v = [0.0] * S.DIM
+        for i, x in pairs:
+            v[i] = x
+        return v
+
+    rows = [
+        (0, unit((0, 1.0), (1, 1.0))),
+        (0, unit((2, 2.0))),
+        (3, unit((3, 1.0), (4, -1.0))),
+        (20, unit((0, 1.0))),
+        (21, unit((1, 1.0))),
+        (22, unit((2, 1.0))),
+        (23, unit((3, 1.0))),
+        (24, unit((0, 1.0))),
+        (25, unit((4, 0.5))),
+    ]
+    _write_parquet(
+        spark, rows, "vec_id long, embedding array<float>",
+        str(tmp_path / "embeddings.parquet"),
+    )
+    for sf in (SF_TEST, str(tmp_path)):
+        assigned, centers = S._ivf_fit(spark, sf)
+        q, cells = _literal_probe_expr(assigned, centers)
+        got = q.select(
+            "d2", F.transform(cells, lambda c: c["d2"]).alias("want")
+        ).collect()
+        assert got and all(list(r["d2"]) == list(r["want"]) for r in got)
+
+        w = Window.partitionBy("query_id").orderBy("d2", "cell")
+        want = sorted(
+            (r["query_id"], r["cell"])
+            for r in q.select(
+                F.col("vec_id").alias("query_id"),
+                F.inline(cells),
+            ).withColumn("pr", F.row_number().over(w))
+            .filter(F.col("pr") <= S.NPROBE).collect()
+        )
+        probed = sorted(
+            (r["query_id"], r["cell"])
+            for r in S._ivf_probed_queries(assigned).collect()
+        )
+        assert probed == want
+    assert sum(1 for qid, _ in probed if qid == 0) == S.NPROBE
+
+
+def test_minhash_build_starts_no_job(spark):
+    """Building dedup_near_minhash's plan runs nothing: no Spark job and
+    no registered checkpoint (execution waits for the caller's action)."""
+    from databricks_feature_store_poc_spark import cacheutil
+    from databricks_feature_store_poc_spark.sources.catalog import load_table
+
+    load_table(spark, SF_TEST, "documents")  # schema inference runs a job
+    sc = spark.sparkContext
+    n_ckpts = len(cacheutil._TRACKED_CKPTS)
+    sc.setJobGroup("minhash-build", "plan build only")
+    try:
+        QUERIES["dedup_near_minhash"](spark, SF_TEST)
+        jobs = sc.statusTracker().getJobIdsForGroup("minhash-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert len(cacheutil._TRACKED_CKPTS) == n_ckpts
+
+
+def test_ivf_plan_holds_no_centroid_literals(spark):
+    """sim_ivf_topk's optimized plan carries no DIM-long array of double
+    literals: the centroids stay in the broadcast kernel."""
+    import re
+
+    from databricks_feature_store_poc_spark.llm.similarity import DIM
+
+    plan = (
+        QUERIES["sim_ivf_topk"](spark, SF_TEST)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    num = r"-?[0-9][0-9.E-]*"
+    assert not re.search(rf"\[({num},){{{DIM - 1}}}{num}\]", plan)
